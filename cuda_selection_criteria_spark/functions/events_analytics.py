@@ -98,17 +98,18 @@ def asof_join(
     """
     # check BOTH sides: a right-side on/order_by column named _p or
     # _side would produce duplicate columns in the tagged union and
-    # fail later with an opaque ambiguity error (ADVICE r5)
-    for side, cols in (
-        ("left", set(left.columns)),
-        ("right", set(on) | set(order_by) | {payload}),
+    # fail later with an opaque ambiguity error. out_col only clashes
+    # on the left: the right payload is aliased to _p before the union
+    for side, cols, reserved in (
+        ("left", set(left.columns), {"_p", "_side", out_col}),
+        ("right", set(on) | set(order_by) | {payload}, {"_p", "_side"}),
     ):
-        clash = {"_p", "_side", out_col} & cols
+        clash = reserved & cols
         if clash:
             # the union-tag composition would silently clobber (or
             # duplicate) these caller columns
             raise ValueError(
-                f"asof_join reserves columns {sorted({'_p', '_side', out_col})}; "
+                f"asof_join reserves columns {sorted(reserved)}; "
                 f"{side} already has {sorted(clash)}"
             )
     ptype = right.schema[payload].dataType

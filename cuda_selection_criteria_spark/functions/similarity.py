@@ -169,6 +169,8 @@ def embedding_knn(
             # candidates replaces ~7 full passes over the NxN matrix
             # with one compare pass — identical output, pinned by the
             # lazy-vs-full parity test.
+            if S.shape[1] == 0:  # empty broadcast side: no neighbors
+                continue
             if k == 1:
                 mx = S.max(axis=1)
                 best = round_half_away(mx, round_digits)
@@ -188,8 +190,6 @@ def embedding_knn(
             # > (k-th raw max) - bucket (the k largest raw values all
             # round >= round(kth), so the rounded top-k boundary is >=
             # round(kth)); rank candidates by (rounded desc, id asc)
-            if S.shape[1] == 0:  # empty broadcast side: nothing to rank
-                continue
             kk = min(k, S.shape[1])
             rk = np.partition(S, S.shape[1] - kk, axis=1)[:, S.shape[1] - kk]
             rows, cols = np.nonzero(S >= (rk[:, None] - thr))

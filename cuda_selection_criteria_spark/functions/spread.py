@@ -20,6 +20,18 @@ Results are partitioning-independent by construction everywhere this
 is applied (groupBy/join keys, per-row projections, pure-function
 sampling), so plans change but row sets do not — the oracle hash
 checks pin that.
+
+The ``getNumPartitions()`` probe reads the plan BEFORE adaptive query
+execution: downstream of a shuffle it sees the configured
+``spark.sql.shuffle.partitions`` (never below parallelism), so
+``spread`` is a no-op there even when AQE later coalesces that shuffle
+into a single partition. The HLL-union verify stage of ``cli dedup``
+is such a case: AQE coalesces its ~94 KB candidate shuffle into one
+task. Forcing ``repartition(defaultParallelism)`` before the payload
+joins was measured (layerbench ``parity_m64``, 4-core VM,
+``local[3]``) to spread verify over 3 tasks, but total task time rose
+from 1.6 to 2.4 s and the dedup wall did not move — the dense verify
+kernel was memory-bound — so verify is deliberately left unspread.
 """
 
 from __future__ import annotations

@@ -174,11 +174,13 @@ def hll_cards_encode_batch(
     Equivalent to ``hll_batch`` -> ``cardinalities`` ->
     ``encode_registers_sparse`` (or dense ``tobytes``) but never
     materializes the full [n_docs, 2^p] register matrix: a reused
-    [doc_chunk, 2^p] scratch (4 MB at p=14) is zeroed, scattered,
-    histogrammed and encoded per chunk. Peak memory drops ~8x and the
-    buffers stay cache-resident — the register matrix was the largest
-    fresh allocation in the sketch stage, the class of traffic this
-    host's fault throttle punishes under multi-worker contention.
+    [doc_chunk, 2^p] scratch (4 MB at p=14) is zeroed, scattered and
+    encoded per chunk. Peak memory drops ~8x and the buffers stay
+    cache-resident — the register matrix was the largest fresh
+    allocation in the sketch stage, the class of traffic this host's
+    fault throttle punishes under multi-worker contention. The
+    histograms come from the nonzero registers the sparse encoding
+    extracts anyway (bin 0 = 2^p - nnz), not from a second dense pass.
     Returns (cards float64[n_docs], blobs list[bytes]).
     """
     m = 1 << p
@@ -187,7 +189,6 @@ def hll_cards_encode_batch(
     cards = np.empty(n_docs, dtype=np.float64)
     blobs: list[bytes] = [b""] * n_docs
     regs = np.empty((min(doc_chunk, max(n_docs, 1)), m), dtype=np.uint8)
-    hist_buf = np.empty((regs.shape[0], m), dtype=np.int32)
     # items are grouped by ascending doc_idx: chunk boundaries via searchsorted
     for lo in range(0, n_docs, doc_chunk):
         hi = min(lo + doc_chunk, n_docs)
@@ -201,11 +202,12 @@ def hll_cards_encode_batch(
             idx, rank = hll_ranks(h, p)
             flat = (doc_idx[i0:i1] - lo) * m + idx
             np.maximum.at(r.reshape(-1), flat, rank)
-        hist = register_histograms(r, buf=hist_buf[:cnk])
+        nz_r, nz_c, ranks, offs = _nonzero_registers(r)
+        hist = np.bincount(nz_r * 64 + ranks, minlength=cnk * 64).reshape(cnk, 64)
+        hist[:, 0] = m - np.diff(offs)
         cards[lo:hi] = ertl_mle_batch(hist, p)
         if encoding == "sparse":
-            for j, b in enumerate(encode_registers_sparse(r)):
-                blobs[lo + j] = b
+            blobs[lo:hi] = _encode_sparse_rows(r, nz_c, ranks, offs)
         else:
             for j in range(cnk):
                 blobs[lo + j] = r[j].tobytes()
@@ -274,14 +276,22 @@ def encode_registers_sparse(regs: np.ndarray) -> list[bytes]:
     sparse blob (a sparse row with nnz == (2^p - 4) / 3 is also exactly
     2^p bytes).
     """
-    n, m = regs.shape
+    return _encode_sparse_rows(regs, *_nonzero_registers(regs)[1:])
+
+
+def _nonzero_registers(regs: np.ndarray):
+    """Set registers of each row: (row, col, rank, CSR row offsets)."""
     nz_r, nz_c = np.nonzero(regs)
-    ranks = regs[nz_r, nz_c]
+    offs = np.zeros(regs.shape[0] + 1, dtype=np.int64)
+    np.cumsum(np.bincount(nz_r, minlength=regs.shape[0]), out=offs[1:])
+    return nz_r, nz_c, regs[nz_r, nz_c], offs
+
+
+def _encode_sparse_rows(regs, nz_c, ranks, offs) -> list[bytes]:
+    m = regs.shape[1]
     idx16 = nz_c.astype("<u2")
-    counts = np.bincount(nz_r, minlength=n)
-    offs = np.concatenate([[0], np.cumsum(counts)])
     out = []
-    for i in range(n):
+    for i in range(regs.shape[0]):
         lo, hi = offs[i], offs[i + 1]
         if 4 + 3 * (hi - lo) >= m:  # sparse not strictly shorter -> dense
             out.append(regs[i].tobytes())
@@ -291,6 +301,106 @@ def encode_registers_sparse(regs: np.ndarray) -> list[bytes]:
             + idx16[lo:hi].tobytes()
             + ranks[lo:hi].tobytes()
         )
+    return out
+
+
+def _parse_distinct(blobs_a, blobs_b, m: int):
+    """Parse each DISTINCT register blob once, keyed by content.
+
+    Returns (ua, ub, offs, idx, rank, dense, hist): per-pair ids into
+    the distinct blobs; CSR set registers (offs[u]:offs[u+1] slices
+    ``idx``/``rank``); one dense 2^p row and one 64-bin histogram per
+    distinct blob (bin 0 = 2^p - nnz).
+    """
+    ids: dict[bytes, int] = {}
+    uniq: list[bytes] = []
+
+    def intern(blobs) -> np.ndarray:
+        out = np.empty(len(blobs), dtype=np.int64)
+        for i, b in enumerate(blobs):
+            b = bytes(b)
+            u = ids.get(b)
+            if u is None:
+                u = ids[b] = len(uniq)
+                uniq.append(b)
+            out[i] = u
+        return out
+
+    ua, ub = intern(blobs_a), intern(blobs_b)
+    n_u = len(uniq)
+    dense = np.zeros((n_u, m), dtype=np.uint8)
+    idx_parts, rank_parts = [], []
+    for u, b in enumerate(uniq):
+        if len(b) == m:  # dense layout
+            row = dense[u]
+            row[:] = np.frombuffer(b, dtype=np.uint8)
+            ix = np.flatnonzero(row)
+            idx_parts.append(ix)
+            rank_parts.append(row[ix])
+            continue
+        c = int(np.frombuffer(b, "<u4", 1, 0)[0])
+        ix = np.frombuffer(b, "<u2", c, 4)
+        rk = np.frombuffer(b, np.uint8, c, 4 + 2 * c)
+        dense[u, ix] = rk
+        idx_parts.append(ix)
+        rank_parts.append(rk)
+    lens = np.fromiter((x.size for x in idx_parts), dtype=np.int64, count=n_u)
+    offs = np.zeros(n_u + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    idx = np.concatenate(idx_parts) if n_u else np.empty(0, np.int64)
+    rank = np.concatenate(rank_parts) if n_u else np.empty(0, np.uint8)
+    owner = np.repeat(np.arange(n_u, dtype=np.int64), lens)
+    hist = np.bincount(owner * 64 + rank, minlength=n_u * 64).reshape(n_u, 64)
+    hist[:, 0] += m - lens
+    return ua, ub, offs, idx, rank, dense, hist
+
+
+def union_histograms(blobs_a, blobs_b, p: int) -> np.ndarray:
+    """Per-pair 64-bin histograms of the register-max union of two
+    register blobs (sparse or dense layout) -> int64 [n_pairs, 64].
+
+    Bit-identical to ``register_histograms(np.maximum(decode_registers(
+    blobs_a, p), decode_registers(blobs_b, p)))`` but never touches the
+    zero registers: each pair starts from its denser side's histogram
+    and moves only the sparser side's set registers that beat the
+    denser side's value (bin old -1, bin new +1). Distinct blobs are
+    parsed once per call, keyed by content (not by any id, which a
+    caller may let collide). Pairs run in chunks of about 2^18
+    sparser-side registers, so peak memory is the distinct blobs' dense
+    rows (at most two [n_pairs, 2^p] uint8 matrices) plus a fixed
+    scratch.
+    """
+    m = 1 << p
+    n = len(blobs_a)
+    ua, ub, offs, idx, rank, dense, hist_u = _parse_distinct(blobs_a, blobs_b, m)
+    lens = np.diff(offs)
+    a_denser = lens[ua] >= lens[ub]
+    d = np.where(a_denser, ua, ub)
+    s = np.where(a_denser, ub, ua)
+    out = hist_u[d]
+    s_len = lens[s]
+    s_end = np.cumsum(s_len)
+    dflat = dense.reshape(-1)
+    lo = 0
+    while lo < n:
+        budget_end = s_end[lo] - s_len[lo] + (1 << 18)
+        hi = max(lo + 1, int(np.searchsorted(s_end, budget_end, side="right")))
+        cl = s_len[lo:hi]
+        # the sparser sides' set registers, pair after pair
+        spans = [slice(offs[u], offs[u + 1]) for u in s[lo:hi].tolist()]
+        ix = np.concatenate([idx[sp] for sp in spans])
+        new = np.concatenate([rank[sp] for sp in spans])
+        old = dflat[np.repeat(d[lo:hi] * m, cl) + ix]
+        # few registers move (near-duplicates share most), so find them
+        # first and map each back to its pair
+        up = np.flatnonzero(new > old)
+        key = np.searchsorted(np.cumsum(cl), up, side="right") * 64
+        nb = (hi - lo) * 64
+        out[lo:hi] += (
+            np.bincount(key + new[up], minlength=nb)
+            - np.bincount(key + old[up], minlength=nb)
+        ).reshape(hi - lo, 64)
+        lo = hi
     return out
 
 

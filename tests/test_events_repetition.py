@@ -237,3 +237,18 @@ def test_asof_join_rejects_reserved_column_clash(spark):
     right = spark.createDataFrame([(1, 9, 2.0)], "user_id long, ts long, value double")
     with pytest.raises(ValueError, match="reserves"):
         asof_join(left, right, on=["user_id"], order_by=["ts"], payload="value")
+
+
+def test_asof_join_right_payload_may_share_out_col_name(spark):
+    """The right payload is aliased before the union, so a payload
+    column named like ``out_col`` is no clash."""
+    from cuda_selection_criteria_spark.functions import asof_join
+
+    left = spark.createDataFrame([(1, 10), (1, 3)], "user_id long, ts long")
+    right = spark.createDataFrame(
+        [(1, 5, 2.0), (1, 9, 4.0)], "user_id long, ts long, asof_value double"
+    )
+    got = asof_join(
+        left, right, on=["user_id"], order_by=["ts"], payload="asof_value"
+    ).collect()
+    assert sorted((r.ts, r.asof_value) for r in got) == [(3, None), (10, 4.0)]

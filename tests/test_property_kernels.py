@@ -17,7 +17,9 @@ from cuda_selection_criteria_spark.sketchlib.batch import (
     encode_registers_sparse,
     hll_batch,
     hll_cards_encode_batch,
+    register_histograms,
     superminhash_batch,
+    union_histograms,
 )
 from cuda_selection_criteria_spark.sketchlib.hashes import (
     shingle_hashes,
@@ -103,3 +105,44 @@ def test_register_roundtrip_any_density(nnz, p, rnd):
     blobs = encode_registers_sparse(regs)
     assert len(blobs[0]) <= m  # never larger than dense
     np.testing.assert_array_equal(decode_registers(blobs, p), regs)
+
+
+# one document: (kind of fill, ship in the dense 2^p-byte layout?)
+_docs = st.lists(
+    st.tuples(st.sampled_from(["empty", "one", "sparse", "half", "full"]), st.booleans()),
+    min_size=1,
+    max_size=6,
+)
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    _docs,
+    st.lists(st.tuples(st.integers(0, 5), st.integers(0, 5)), max_size=30),
+    st.sampled_from([6, 14]),
+    st.integers(min_value=0, max_value=2**32 - 1),
+)
+def test_union_histograms_equal_dense_reference(docs, pairs, p, seed):
+    rng = np.random.default_rng(seed)
+    m = 1 << p
+    fill = {"empty": 0, "one": 1, "sparse": m // 16, "half": m // 2, "full": m}
+    regs = np.zeros((len(docs), m), dtype=np.uint8)
+    for i, (kind, _) in enumerate(docs):
+        idx = rng.choice(m, size=fill[kind], replace=False)
+        regs[i, idx] = rng.integers(1, 64 - p + 2, size=idx.size)
+    sparse = encode_registers_sparse(regs)
+    blobs = [regs[i].tobytes() if dense else sparse[i] for i, (_, dense) in enumerate(docs)]
+    n = len(docs)
+    pairs = [(a % n, b % n) for a, b in pairs]
+    # always: a blob paired with itself, and blob 0 repeated across pairs
+    pairs += [(0, 0)] + [(0, j) for j in range(n)] + [(j, 0) for j in range(n)]
+    a = [blobs[i] for i, _ in pairs]
+    b = [blobs[j] for _, j in pairs]
+    ref = register_histograms(np.maximum(decode_registers(a, p), decode_registers(b, p)))
+    got = union_histograms(a, b, p)
+    assert got.dtype == ref.dtype
+    np.testing.assert_array_equal(got, ref)
+
+
+def test_union_histograms_no_pairs():
+    assert union_histograms([], [], 14).shape == (0, 64)

@@ -105,6 +105,63 @@ def test_forced_id_collision_wrongly_merges(spark):
     assert clusters.get("c") == clusters["a"]  # the WRONG merge happens
 
 
+def test_verify_shared_url_id_uses_each_rows_own_blobs(spark):
+    """Two different documents share url_id 2 (the forced collision
+    above), one shipped in the dense register layout: every verify row
+    must score its OWN blobs, as the dense max + histogram does — the
+    verify kernel's per-batch blob cache is keyed by content, not id."""
+    import dataclasses
+
+    from cuda_selection_criteria_spark.operators.verify import verify_pairs
+    from cuda_selection_criteria_spark.sketchlib.batch import (
+        decode_registers,
+        hll_cards_encode_batch,
+        register_histograms,
+    )
+    from cuda_selection_criteria_spark.sketchlib.hashes import shingle_hashes
+
+    p = CFG.hll_p
+    texts = {"a": LONG_A, "b": LONG_A[:-40] + " tail", "c": LONG_C}
+    blobs, cards = {}, {}
+    for url, text in texts.items():
+        items = shingle_hashes(text, CFG.shingle_k)
+        enc = "dense" if url == "c" else "sparse"
+        card, blob = hll_cards_encode_batch(
+            items, np.zeros(items.size, dtype=np.int64), 1, p, encoding=enc
+        )
+        cards[url], blobs[url] = float(card[0]), blob[0]
+    assert len(blobs["c"]) == 1 << p and len(blobs["a"]) < 1 << p
+    ids = {"a": 1, "b": 2, "c": 2}
+    sketches = spark.createDataFrame(
+        [(ids[u], u, bytearray(blobs[u])) for u in texts],
+        "url_id long, url string, hll14 binary",
+    )
+    # card_a / card_b: the candidate frame carries one value per id
+    cands = spark.createDataFrame(
+        [(1, 2, cards["a"], cards["b"]), (2, 2, cards["b"], cards["b"])],
+        "id_a long, id_b long, card_a double, card_b double",
+    )
+    keep_all = dataclasses.replace(CFG, tau=-1.0)  # Jaccard >= -1 always
+    got = sorted(
+        (r.url_a, r.url_b, r.jaccard)
+        for r in verify_pairs(cands, sketches, keep_all).collect()
+    )
+
+    def dense_jaccard(ua, ub, e1, e2):
+        mx = np.maximum(decode_registers([blobs[ua]], p), decode_registers([blobs[ub]], p))
+        t = ertl_mle_batch(register_histograms(mx), p)[0]
+        return (e1 + e2 - t) / t
+
+    rows = [("a", x, cards["a"], cards["b"]) for x in "bc"]
+    rows += [(x, y, cards["b"], cards["b"]) for x in "bc" for y in "bc"]
+    want = sorted(
+        (min(x, y), max(x, y), dense_jaccard(x, y, e1, e2)) for x, y, e1, e2 in rows
+    )
+    assert got == want
+    # the collision is visible: b and c score differently against a
+    assert got[0][2] != got[1][2]
+
+
 def test_dense_ids_keep_collision_victims_apart(spark):
     """Same three documents through the default dense-id pipeline:
     C stays out of the A-B cluster."""

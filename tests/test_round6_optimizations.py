@@ -84,6 +84,29 @@ def test_embedding_knn_lazy_rounding_matches_full_matrix(spark):
     assert got5 == _ref_knn(np.array(ids), V, k=5)
 
 
+@pytest.mark.parametrize("k", [1, 3])
+def test_embedding_knn_empty_broadcast_side_yields_no_rows(spark, monkeypatch, k):
+    """A query batch with nonzero vectors against an empty broadcast
+    side (every broadcast vector dropped) returns no neighbors on both
+    the k == 1 and the top-k branch; k == 1 used to crash on a
+    zero-size max."""
+    from cuda_selection_criteria_spark.functions import similarity
+
+    sc = spark.sparkContext
+    monkeypatch.setattr(
+        similarity,
+        "_collect_broadcast_vectors",
+        lambda df, max_rows: sc.broadcast(
+            (np.zeros(0, dtype=np.int64), np.zeros((0, 2)), np.zeros(0))
+        ),
+    )
+    pdf = pd.DataFrame({"vec_id": [0, 1], "embedding": [[1.0, 0.0], [0.0, 1.0]]})
+    df = spark.createDataFrame(pdf).withColumn(
+        "embedding", F.col("embedding").cast("array<float>")
+    )
+    assert similarity.embedding_knn(df, k=k).collect() == []
+
+
 def test_embedding_sim_pairs_lazy_threshold_matches_full_matrix(spark):
     from cuda_selection_criteria_spark.functions.similarity import (
         embedding_sim_pairs,
