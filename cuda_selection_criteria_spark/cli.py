@@ -215,8 +215,10 @@ def main(argv=None) -> None:
             "--salt-target",
             type=int,
             default=None,
-            help="two-level salting of hot band keys in parity mode: buckets "
-            "larger than this split into salt blocks (see candidate_pairs)",
+            help="two-level salting of hot candidate buckets (band buckets, or "
+            "log-cardinality buckets for hll_a/hll_an/cb): buckets larger than "
+            "this split into salt blocks (see candidate_pairs); star pairing "
+            "ignores it",
         )
         s.add_argument(
             "--bucket-pairing",

@@ -13,20 +13,25 @@ with the Spark-native equivalent: a pair survives iff
 
 Joining on the raw band slice (array<long>) makes hash collisions
 impossible by construction — band equality IS the join condition.
-An xxhash64 of the slice is used only as an optional narrow pre-key.
+The band join and the CB log-cardinality bucket join are one bucket
+self-join (``_bucket_pairs``) with one cap, one salting step and one
+CB prune.
 
 Scale notes (north_rule):
 - band rows are (band_id, band slice, url_id, card_i) — no urls, no
   16KiB register blobs through this shuffle;
 - AQE skew-join splitting handles hot band keys (template pages);
-  ``max_band_bucket`` optionally caps pathological buckets (off by
-  default: parity keeps every colliding pair);
+  ``salt_target`` optionally salts hot buckets and ``max_band_bucket``
+  caps pathological ones (both off by default: parity keeps every
+  colliding pair);
 - the CB filter runs pre-dedup, cutting the dropDuplicates shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..oracle import DedupConfig
@@ -53,112 +58,27 @@ def cb_bucket_pairs(
     The exact CB predicate re-filters after the join; dropDuplicates
     collapses the same-bucket double match. When the criterion needs
     hll_aux blobs they are joined back AFTER the pair dedup (late
-    payload attach — the narrow sides above explain why).
+    payload attach: the 256 B blobs ride neither the bucket join, the
+    salt explode nor the dedup exchange — at 10^10 CB-surviving pairs
+    that is TBs of avoidable shuffle payload).
 
     Flood guard: at tau=0.9 one bucket spans only ~11% in cardinality,
     and web corpora concentrate document sizes — ~100 buckets cover
     10..10^6-shingle docs, so at 10^12 docs a single bucket holds
     ~10^10 rows and an unguarded self-join is quadratic within it.
-    ``salt_target`` applies the same two-level salting as
-    ``candidate_pairs``: a bucket whose side-load exceeds the target is
-    split into s salt blocks per side, spreading the f^2 pair work over
-    s^2 shuffle keys while emitting every pair exactly once (a's salt
-    pins sa, b's pins sb). ``max_bucket`` drops oversized buckets
-    entirely (last-resort cap; OFF for parity). Note the criterion
-    itself stays inherently pairwise post-CB — that is the reference's
-    hll_a/hll_an semantics (selection.cpp evaluates every CB-surviving
-    pair); smh_a's banded LSH remains the 10^12-doc scale default, with
-    salting making hll_a/hll_an *executable* at scale rather than
-    straggler-bound.
+    ``salt_target`` and ``max_bucket`` are the band join's two-level
+    salting and bucket cap (see ``candidate_pairs``), applied to the
+    log-cardinality buckets. Note the criterion itself stays inherently
+    pairwise post-CB — that is the reference's hll_a/hll_an semantics
+    (selection.cpp evaluates every CB-surviving pair); smh_a's banded
+    LSH remains the 10^12-doc scale default, with salting making
+    hll_a/hll_an *executable* at scale rather than straggler-bound.
     """
-    import math
-
-    inv_log = 1.0 / math.log(1.0 / cfg.tau)
-    has_aux = "hll_aux" in sketches.columns
-    base = (
-        sketches.where(F.col("card_i") > 0)
-        .select("url_id", "card_i", F.floor(F.log(F.col("card_i").cast("double")) * F.lit(inv_log)).alias("bkt"))
+    base, neighbours = _log_buckets(sketches, cfg.tau)
+    pairs = _bucket_pairs(
+        base, ["bkt"], neighbours, cfg.tau, salt_target, max_bucket
     )
-    join_key = ["bkt"]
-    if salt_target is not None or max_bucket is not None:
-        # per-BUCKET doc counts first (the stats table is tiny by
-        # construction — log-scale buckets: ~100s of rows for any
-        # corpus — so every join against it broadcasts)
-        na = base.groupBy("bkt").agg(F.count("*").alias("_na"))
-    if max_bucket is not None:
-        # cap = drop the DOCS of buckets whose OWN size exceeds the cap,
-        # BEFORE sides are built — capping on the exploded join-key load
-        # would also drop keys k-1/k+1 merely adjacent to a flooded
-        # bucket k (non-flooded neighbor pairs silently lost)
-        over = na.where(F.col("_na") > max_bucket).select("bkt")
-        base = base.join(F.broadcast(over), "bkt", "left_anti")
-        na = na.where(F.col("_na") <= max_bucket)
-    # NARROW sides: the hll_aux register blobs (256 B each) do NOT ride
-    # the bucket join, the salt explode, or the dropDuplicates exchange
-    # — pairs dedup on (id, card) only and the aux payload joins back
-    # AFTER the dedup, the same late-payload shape verify_pairs uses.
-    # At 10^10 CB-surviving pairs that is TBs of avoidable shuffle
-    # payload (guide §2.3 / §8: shuffle keys and metadata, attach heavy
-    # bytes once).
-    a = base.select(
-        F.col("bkt"),
-        F.col("url_id").alias("id_a"),
-        F.col("card_i").alias("card_a"),
-    )
-    b = base.select(
-        F.explode(F.array(F.col("bkt") - 1, F.col("bkt"), F.col("bkt") + 1)).alias("bkt"),
-        F.col("url_id").alias("id_b"),
-        F.col("card_i").alias("card_b"),
-    )
-    if salt_target is not None:
-        # per-join-key load AFTER the cap: a-side sees n_k rows at key
-        # k, b-side sees n_{k-1}+n_k+n_{k+1} (the +-1 explode)
-        nb = (
-            na.select(
-                F.explode(
-                    F.array(F.col("bkt") - 1, F.col("bkt"), F.col("bkt") + 1)
-                ).alias("bkt"),
-                "_na",
-            )
-            .groupBy("bkt")
-            .agg(F.sum("_na").alias("_nb"))
-        )
-        stats = na.join(nb, "bkt").select(
-            "bkt", F.greatest("_na", "_nb").alias("_load")
-        )
-        hot = stats.where(F.col("_load") > salt_target)
-        s_col = F.ceil(
-            F.coalesce(F.col("_load"), F.lit(1)) / F.lit(salt_target)
-        ).cast("int")
-        all_salts = F.explode(F.sequence(F.lit(0), s_col - 1))
-        a_cols = [c for c in a.columns if c != "bkt"]
-        b_cols = [c for c in b.columns if c != "bkt"]
-        a = a.join(F.broadcast(hot), "bkt", "left").select(
-            "bkt",
-            F.pmod(F.xxhash64("id_a"), s_col).cast("int").alias("sa"),
-            all_salts.alias("sb"),
-            *a_cols,
-        )
-        b = b.join(F.broadcast(hot), "bkt", "left").select(
-            "bkt",
-            all_salts.alias("sa"),
-            F.pmod(F.xxhash64("id_b"), s_col).cast("int").alias("sb"),
-            *b_cols,
-        )
-        join_key = ["bkt", "sa", "sb"]
-    tau = cfg.tau
-    pairs = (
-        a.join(b, join_key)
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(
-            F.least("card_a", "card_b").cast("double")
-            / F.greatest("card_a", "card_b").cast("double")
-            >= F.lit(tau)
-        )
-        .drop(*join_key)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if has_aux:
+    if "hll_aux" in sketches.columns:
         payload = sketches.select("url_id", "hll_aux")
         pairs = pairs.join(
             payload.select(
@@ -172,6 +92,31 @@ def cb_bucket_pairs(
             "id_b",
         )
     return pairs
+
+
+def _log_buckets(
+    sketches: DataFrame, tau: float
+) -> tuple[DataFrame, list[Column]]:
+    """sketches -> (url_id, card_i, bkt) rows with bkt =
+    floor(log_(1/tau) card_i), and the b-side key that puts each doc in
+    its own bucket and both neighbours."""
+    inv_log = 1.0 / math.log(1.0 / tau)
+    base = sketches.where(F.col("card_i") > 0).select(
+        "url_id",
+        "card_i",
+        F.floor(F.log(F.col("card_i").cast("double")) * F.lit(inv_log)).alias("bkt"),
+    )
+    bkt = F.col("bkt")
+    return base, [F.explode(F.array(bkt - 1, bkt, bkt + 1)).alias("bkt")]
+
+
+def _cb_keep(tau: float) -> Column:
+    """The CB predicate, symmetric form: min(card)/max(card) >= tau."""
+    return (
+        F.least("card_a", "card_b").cast("double")
+        / F.greatest("card_a", "card_b").cast("double")
+        >= F.lit(tau)
+    )
 
 
 def aux_criterion_filter(pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -247,7 +192,6 @@ def _star_pairs(
         stats = stats.where(F.col("_n") <= max_band_bucket)
     # inner join: rows in dropped (oversized) buckets simply don't match
     annotated = bands.join(stats, ["band_id", "band"])
-    tau = cfg.tau
     return (
         annotated.where(F.col("url_id") != F.col("_min.url_id"))
         .select(
@@ -260,11 +204,7 @@ def _star_pairs(
             .otherwise(F.col("card_i"))
             .alias("card_b"),
         )
-        .where(
-            F.least("card_a", "card_b").cast("double")
-            / F.greatest("card_a", "card_b").cast("double")
-            >= F.lit(tau)
-        )
+        .where(_cb_keep(cfg.tau))
         .dropDuplicates(["id_a", "id_b"])
     )
 
@@ -299,87 +239,125 @@ def candidate_pairs(
         preserved whenever the bucket min verifies against members,
         which near-identical template cliques do). This is the
         10^12-doc mode: candidate volume becomes linear in corpus size
-        instead of quadratic in clique size.
+        instead of quadratic in clique size. It ignores ``salt_target``:
+        its output is already linear in the bucket size.
+      Any other value raises ``ValueError``.
 
     ``max_band_bucket``: if set, band buckets larger than this are
     dropped entirely (last-resort flood guard; OFF for parity).
 
-    ``salt_target``: explicit two-level salting for hot band keys in
-    parity mode (the OpenMP-dynamic-schedule analogue the reference
-    uses for skewed per-file cost, src/build_sketch.cpp:232; SURVEY §4).
-    A bucket of f rows is split into s = ceil(f / salt_target) salt
-    blocks; each side joins on (band, salt_a, salt_b), spreading the
-    f^2 pair work over s^2 shuffle keys of ~salt_target^2 work each
-    instead of one straggler key. Every pair still appears exactly once
-    (a's salt pins salt_a, b's pins salt_b). Buckets at or under
-    salt_target are untouched (s = 1). OFF by default: AQE skew-join
-    splitting covers moderate skew; turn this on when one template
-    clique exceeds what a single task should hold.
+    ``salt_target``: explicit two-level salting for hot band keys (the
+    OpenMP-dynamic-schedule analogue the reference uses for skewed
+    per-file cost, src/build_sketch.cpp:232; SURVEY §4). A bucket of f
+    rows is split into s = ceil(f / salt_target) salt blocks; each side
+    joins on (band, salt_a, salt_b), spreading the f^2 pair work over
+    s^2 shuffle keys of ~salt_target^2 work each instead of one
+    straggler key. Every pair still appears exactly once (a's salt pins
+    salt_a, b's pins salt_b). Buckets at or under salt_target are
+    untouched (s = 1). OFF by default: AQE skew-join splitting covers
+    moderate skew; turn this on when one template clique exceeds what a
+    single task should hold.
     """
+    if bucket_pairing not in ("all", "star"):
+        raise ValueError(f"unknown bucket_pairing: {bucket_pairing!r}")
     if bucket_pairing == "star":
         return _star_pairs(sketches, cfg, max_band_bucket)
-    bands = explode_bands(sketches, cfg)
-    sizes = None
-    if max_band_bucket is not None or salt_target is not None:
-        sizes = bands.groupBy("band_id", "band").agg(F.count("*").alias("_n"))
-    if max_band_bucket is not None:
-        bands = bands.join(
-            F.broadcast(sizes.where(F.col("_n") > max_band_bucket)),
-            ["band_id", "band"],
-            "left_anti",
+    return _bucket_pairs(
+        explode_bands(sketches, cfg),
+        ["band_id", "band"],
+        None,
+        cfg.tau,
+        salt_target,
+        max_band_bucket,
+    )
+
+
+def _bucket_sides(
+    base: DataFrame,
+    key: list[str],
+    b_key: list[Column] | None,
+    salt_target: int | None,
+    max_bucket: int | None,
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """Rows (key..., url_id, card_i) -> the two sides of the bucket
+    self-join, (join key..., id_a, card_a) and (join key..., id_b,
+    card_b), and the join key.
+
+    Side a sits on ``key``; side b on ``b_key`` (``None``: ``key``
+    itself), which may explode one row onto several keys.
+
+    ``max_bucket`` drops the rows of keys whose OWN size exceeds it,
+    before the sides are built — capping on side b's exploded load
+    would also drop keys merely adjacent to a flooded one.
+
+    ``salt_target`` splits every key whose load, the larger of its two
+    side counts, exceeds the target into s = ceil(load / target) salt
+    blocks: a row of side a takes salt sa = hash(id) mod s and joins
+    every sb, a row of side b the reverse, so each pair meets on exactly
+    one (key, sa, sb) and no such key holds more than ~target rows a
+    side.
+    """
+    if max_bucket is not None:
+        # only the few keys over the cap survive the filter: it broadcasts
+        over = (
+            base.groupBy(*key)
+            .agg(F.count("*").alias("_n"))
+            .where(F.col("_n") > max_bucket)
+            .select(*key)
         )
-    if salt_target is not None:
-        hot = sizes.where(F.col("_n") > salt_target)
-        if max_band_bucket is not None:
-            hot = hot.where(F.col("_n") <= max_band_bucket)
-        bands = bands.join(F.broadcast(hot), ["band_id", "band"], "left").withColumn(
-            "_s",
-            F.ceil(F.coalesce(F.col("_n"), F.lit(1)) / F.lit(salt_target)).cast("int"),
+        base = base.join(F.broadcast(over), key, "left_anti")
+    a = base.select(
+        *key, F.col("url_id").alias("id_a"), F.col("card_i").alias("card_a")
+    )
+    b = base.select(
+        *(b_key or key), F.col("url_id").alias("id_b"), F.col("card_i").alias("card_b")
+    )
+    if salt_target is None:
+        return a, b, key
+    load = a.groupBy(*key).agg(F.count("*").alias("_load"))
+    if b_key is not None:
+        # with a shared key both sides count the same rows: no join, which
+        # for band keys (nearly one per band row) would not be small
+        n_b = b.groupBy(*key).agg(F.count("*").alias("_nb"))
+        load = load.join(n_b, key).select(
+            *key, F.greatest("_load", "_nb").alias("_load")
         )
-        all_salts = F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
-        own_salt = F.pmod(F.xxhash64("url_id"), F.col("_s")).cast("int")
-        a = bands.select(
-            "band_id",
-            "band",
-            own_salt.alias("sa"),
-            all_salts.alias("sb"),
-            F.col("url_id").alias("id_a"),
-            F.col("card_i").alias("card_a"),
-        )
-        b = bands.select(
-            "band_id",
-            "band",
-            all_salts.alias("sa"),
-            own_salt.alias("sb"),
-            F.col("url_id").alias("id_b"),
-            F.col("card_i").alias("card_b"),
-        )
-        join_key = ["band_id", "band", "sa", "sb"]
-    else:
-        a = bands.select(
-            F.col("band_id"),
-            F.col("band"),
-            F.col("url_id").alias("id_a"),
-            F.col("card_i").alias("card_a"),
-        )
-        b = bands.select(
-            F.col("band_id"),
-            F.col("band"),
-            F.col("url_id").alias("id_b"),
-            F.col("card_i").alias("card_b"),
-        )
-        join_key = ["band_id", "band"]
-    tau = cfg.tau
-    pairs = (
-        a.join(b, on=join_key)
+    hot = load.where(F.col("_load") > salt_target)
+    s = F.ceil(F.coalesce(F.col("_load"), F.lit(1)) / F.lit(salt_target)).cast("int")
+    all_salts = F.explode(F.sequence(F.lit(0), s - 1))
+    a = a.join(F.broadcast(hot), key, "left").select(
+        *key,
+        F.pmod(F.xxhash64("id_a"), s).cast("int").alias("sa"),
+        all_salts.alias("sb"),
+        "id_a",
+        "card_a",
+    )
+    b = b.join(F.broadcast(hot), key, "left").select(
+        *key,
+        all_salts.alias("sa"),
+        F.pmod(F.xxhash64("id_b"), s).cast("int").alias("sb"),
+        "id_b",
+        "card_b",
+    )
+    return a, b, [*key, "sa", "sb"]
+
+
+def _bucket_pairs(
+    base: DataFrame,
+    key: list[str],
+    b_key: list[Column] | None,
+    tau: float,
+    salt_target: int | None,
+    max_bucket: int | None,
+) -> DataFrame:
+    """The bucket self-join both candidate generators share: rows
+    (key..., url_id, card_i) -> (id_a, id_b, card_a, card_b), id_a <
+    id_b, CB-pruned before the dedup shuffle (see ``_bucket_sides``)."""
+    a, b, join_key = _bucket_sides(base, key, b_key, salt_target, max_bucket)
+    return (
+        a.join(b, join_key)
         .where(F.col("id_a") < F.col("id_b"))
-        # CB prune before the dedup shuffle (cheap, symmetric form)
-        .where(
-            F.least("card_a", "card_b").cast("double")
-            / F.greatest("card_a", "card_b").cast("double")
-            >= F.lit(tau)
-        )
+        .where(_cb_keep(tau))
         .select("id_a", "id_b", "card_a", "card_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    return pairs

@@ -92,6 +92,8 @@ def connected_components(
     ids) is identical and pinned by a parity test plus the driver's
     DuckDB recursive-CTE closure gate. Above the threshold the Kiveris
     alternation runs distributed; pass ``local_threshold=0`` to force it.
+    It raises ``RuntimeError`` when ``max_iter`` rounds end without a
+    fixed point.
     """
     edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).where(
         F.col("a") != F.col("b")
@@ -133,6 +135,12 @@ def connected_components(
         if cur == prev_sig:
             break
         prev_sig = cur
+    else:
+        # an unconverged labeling splits components: fail, don't return it
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            f"rounds ({sig['n']} edges after the last round)"
+        )
     members = edges.select(F.col("a").alias("node"), F.col("b").alias("cluster_id"))
     roots = edges.select(F.col("b").alias("node"), F.col("b").alias("cluster_id")).distinct()
     return members.union(roots).distinct()

@@ -83,7 +83,6 @@ def dedup_from_sketches(
 def dedup_pipeline(
     pages: DataFrame,
     cfg: DedupConfig = DedupConfig(),
-    persist_sketches: bool = True,
     max_band_bucket: int | None = None,
     bucket_pairing: str = "all",
     salt_target: int | None = None,
@@ -92,35 +91,18 @@ def dedup_pipeline(
     """pages(url, text, ...) -> sketches, dup_pairs(url_a,url_b,jaccard),
     clusters(url, cluster_id).
 
-    ``persist_sketches``: the sketches DataFrame feeds both the band
-    join (twice) and the verify joins — cache it so the expensive
-    mapInPandas sketch pass runs once. In a warehouse deployment this
-    is a real table write instead (warehouse.py).
+    The sketches are materialized once: the sketch pass then runs once,
+    and the candidate self-join, verify joins and clusters join all see
+    the same dense ids, which are assigned at execution.
     """
-    # id_mode tracks the materialization mode: dense ids are assigned
-    # at EXECUTION, so they are only consistent across the candidate
-    # self-join / verify joins / clusters join when the sketches are
-    # materialized once (the localCheckpoint below, or a warehouse
-    # table). Without persistence each branch re-executes the sketch
-    # plan independently and monotonically_increasing_id may reassign
-    # (Spark documents it nondeterministic under re-ordered input) —
-    # silently joining the wrong documents. The un-persisted path
-    # therefore uses the pure-function hash id, which is safe to
-    # recompute (and whose 2^-64 collision exposure is acceptable at
-    # the small scales where skipping persistence makes sense).
-    sketches = sketch_pages(
-        pages,
-        cfg,
-        min_partitions=min_partitions,
-        id_mode="dense" if persist_sketches else "hash",
+    # localCheckpoint over .persist(): the columnar cache builder
+    # measured +66s on 600MB of sketch blobs (compression + memory
+    # store contention) while checkpoint blocks write at full
+    # parallelism. On a real cluster this materialization is the
+    # warehouse sketches table instead (warehouse.sketch_with_resume).
+    sketches = sketch_pages(pages, cfg, min_partitions=min_partitions).localCheckpoint(
+        eager=True
     )
-    if persist_sketches:
-        # localCheckpoint over .persist(): the columnar cache builder
-        # measured +66s on 600MB of sketch blobs (compression + memory
-        # store contention) while checkpoint blocks write at full
-        # parallelism. On a real cluster this materialization is the
-        # warehouse sketches table instead (warehouse.sketch_with_resume).
-        sketches = sketches.localCheckpoint(eager=True)
     return dedup_from_sketches(
         sketches,
         cfg,

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from cuda_selection_criteria_spark.operators import connected_components
 from cuda_selection_criteria_spark.oracle import connected_components as uf
 
@@ -39,6 +41,15 @@ def test_long_chain_needs_logn_rounds(spark):
     # a 300-node path is the worst case for label propagation depth
     chain = [(i, i + 1) for i in range(300)]
     _check(spark, chain)
+
+
+def test_unconverged_alternation_raises(spark):
+    """Two rounds cannot label a 300-node path; an unconverged labeling
+    splits the component, so it must fail instead of being returned."""
+    chain = [(i, i + 1) for i in range(300)]
+    df = spark.createDataFrame(chain, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(df, max_iter=2, local_threshold=0)
 
 
 def test_star_and_clique_mix(spark):

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import pytest
+
+from cuda_selection_criteria_spark.operators import candidate_pairs
 from cuda_selection_criteria_spark.oracle import DedupConfig
 from cuda_selection_criteria_spark.pipeline import dedup_pipeline, pages_from_corpus
 
@@ -25,3 +28,11 @@ def test_star_mode_preserves_clusters(spark):
     assert star_groups == full_groups
     # star emits far fewer pairs on big cliques
     assert star.dup_pairs.count() <= full.dup_pairs.count()
+
+
+@pytest.mark.parametrize("mode", ["Star", "pairs", ""])
+def test_unknown_bucket_pairing_raises(spark, mode):
+    """Only "all" and "star" exist: a typo must not fall back to all-pairs."""
+    sk = spark.createDataFrame([], "url_id long, card_i long, smh array<long>")
+    with pytest.raises(ValueError, match="bucket_pairing"):
+        candidate_pairs(sk, DedupConfig(), bucket_pairing=mode)
