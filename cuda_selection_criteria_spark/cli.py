@@ -181,6 +181,8 @@ def cmd_textops(args) -> None:
 
 
 def main(argv=None) -> None:
+    from .oracle import CRITERIA
+
     p = argparse.ArgumentParser(prog="cuda_selection_criteria_spark")
     p.add_argument("--master", default=None)
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -203,7 +205,7 @@ def main(argv=None) -> None:
         s.add_argument(
             "-c",
             "--criterion",
-            choices=["smh_a", "hll_a", "hll_an", "cb"],
+            choices=CRITERIA,
             default="smh_a",
             help="selection criterion, mirroring the reference's -c flag "
             "(/root/reference/src/selection.cpp:107-111): smh_a = LSH band "

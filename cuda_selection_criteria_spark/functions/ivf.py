@@ -20,7 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _spread, round_half_away
+from .similarity import round_half_away
+from .spread import spread
 
 
 def _train_centroids(V: np.ndarray, n_cells: int, seed: int, iters: int = 10) -> np.ndarray:
@@ -112,10 +113,10 @@ def embedding_ivf_topk(
                 }
             )
 
-    # _spread: the bench-scale embeddings table is one parquet split —
+    # spread: the bench-scale embeddings table is one parquet split —
     # without the repartition the whole assignment matmul runs in a
     # single task (similarity.py rationale)
-    assigned = _spread(embeddings.select("vec_id", "embedding")).mapInPandas(
+    assigned = spread(embeddings.select("vec_id", "embedding")).mapInPandas(
         assign, schema="vec_id long, cell int, vec array<float>"
     )
 

@@ -2,11 +2,7 @@
 
 Images/audio/video are carried as ``binary`` columns with a metadata
 struct; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` stages. The codec step itself is STUBBED
-(this container ships no image/audio libraries): ``codec="fake"`` is a
-deterministic pure-numpy stand-in (so schema, partitioning, UDF
-signature and batch shape are real and tested); ``codec="real"``
-raises NotImplementedError where Pillow/ffmpeg would plug in.
+Arrow-batched ``mapInPandas`` stages.
 """
 
 from __future__ import annotations
@@ -41,21 +37,13 @@ def _fake_decode(payload: bytes, width: int, height: int) -> np.ndarray:
     return src[idx]
 
 
-def media_features(
-    media: DataFrame, feat_dim: int = 16, codec: str = "fake"
-) -> DataFrame:
+def media_features(media: DataFrame, feat_dim: int = 16) -> DataFrame:
     """Decode + pooled feature extraction per media row.
 
     The Spark plumbing (column pruning to payload+dims, Arrow batching,
     one numpy pass per batch) is the real deliverable; swap
     ``_fake_decode`` for a library decoder on a real cluster.
     """
-    if codec == "real":
-        raise NotImplementedError(
-            "real codecs (Pillow/ffmpeg) are not installed in this container; "
-            "use codec='fake' for the deterministic stand-in"
-        )
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
@@ -117,7 +105,7 @@ def media_from_documents(documents: DataFrame, ascii_only: bool = False) -> Data
     )
 
 
-def media_feature_sums(media: DataFrame, feat_dim: int = 16, codec: str = "fake") -> DataFrame:
+def media_feature_sums(media: DataFrame, feat_dim: int = 16) -> DataFrame:
     """(media_id, dim, feat_sum): integer pooled features of the decoded
     plane, exploded one row per feature dimension.
 
@@ -127,12 +115,6 @@ def media_feature_sums(media: DataFrame, feat_dim: int = 16, codec: str = "fake"
     array<float> output the driver's canonicalizer can't sort). Same
     decode plumbing (Arrow batches, mapInPandas, column pruning).
     """
-    if codec == "real":
-        raise NotImplementedError(
-            "real codecs (Pillow/ffmpeg) are not installed in this container; "
-            "use codec='fake' for the deterministic stand-in"
-        )
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         dims = np.arange(feat_dim, dtype=np.int32)
         for pdf in batches:
@@ -164,11 +146,9 @@ def media_feature_sums(media: DataFrame, feat_dim: int = 16, codec: str = "fake"
     )
 
 
-def media_thumbnails(media: DataFrame, max_side: int = 8, codec: str = "fake") -> DataFrame:
+def media_thumbnails(media: DataFrame, max_side: int = 8) -> DataFrame:
     """Resize (nearest-neighbor) to a bounded thumbnail, re-encoded as
-    raw bytes. Same stub discipline as media_features."""
-    if codec == "real":
-        raise NotImplementedError("install an image library and replace _fake_decode")
+    raw bytes."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

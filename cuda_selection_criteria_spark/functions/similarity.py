@@ -40,7 +40,7 @@ def round_half_away(x: np.ndarray, digits: int) -> np.ndarray:
 # repartition-to-parallelism before the opaque mapInPandas passes: the
 # embeddings table is one parquet split at bench scale, which would run
 # the whole O(N * N_broadcast) matmul in a single task (spread.py)
-from .spread import spread as _spread
+from .spread import spread
 
 
 def _round_candidate_threshold(digits: int) -> float:
@@ -221,7 +221,7 @@ def embedding_knn(
     schema = "vec_id long, neighbor_id long, sim double" + (
         ", rank long" if k > 1 else ""
     )
-    return _spread(embeddings.select("vec_id", "embedding")).mapInPandas(
+    return spread(embeddings.select("vec_id", "embedding")).mapInPandas(
         fn, schema=schema
     )
 
@@ -337,7 +337,7 @@ def embedding_sim_pairs(
                 {"id_a": qids[qi][keep], "id_b": b_ids[bi][keep], "sim": sims_r[keep]}
             )
 
-    return _spread(embeddings.select("vec_id", "embedding")).mapInPandas(
+    return spread(embeddings.select("vec_id", "embedding")).mapInPandas(
         fn, schema="id_a long, id_b long, sim double"
     )
 
@@ -400,7 +400,7 @@ def embedding_lsh_candidates(
                 }
             )
 
-    # no _spread here: the hyperplane pass is a tiny matmul (N x dim x
+    # no spread here: the hyperplane pass is a tiny matmul (N x dim x
     # planes), so the repartition exchange costs more than the
     # parallelism buys — measured 0.98s -> 1.45s WITH the spread at a
     # 20k-vector scale; the join/dedup stages below dominate and

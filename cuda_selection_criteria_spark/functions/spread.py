@@ -12,9 +12,9 @@ parallelism ONLY when its planned partition count is lower — the
 adaptive form the optimization guide asks for (§2: derive partitioning
 from input, don't tune a constant): big inputs are untouched (no extra
 exchange at scale), small inputs pay one tiny exchange (the bench
-tables are ~5-15 MB) to buy a parallelism-wide map stage. Same
-discipline ``operators/sketch.py`` has always applied to the sketch
-pass, factored out for every other operator.
+tables are ~5-15 MB) to buy a parallelism-wide map stage. The sketch
+stage (``operators/sketch.py``) spreads its (url, text) projection
+through this same helper.
 
 Results are partitioning-independent by construction everywhere this
 is applied (groupBy/join keys, per-row projections, pure-function

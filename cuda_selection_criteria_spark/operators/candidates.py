@@ -96,12 +96,16 @@ def cb_bucket_pairs(
 
 def _log_buckets(
     sketches: DataFrame, tau: float
-) -> tuple[DataFrame, list[Column]]:
+) -> tuple[DataFrame, list[Column] | None]:
     """sketches -> (url_id, card_i, bkt) rows with bkt =
     floor(log_(1/tau) card_i), and the b-side key that puts each doc in
-    its own bucket and both neighbours."""
+    its own bucket and both neighbours. At tau == 1 CB keeps only equal
+    cardinalities, so bkt is card_i itself and side b stays on it."""
+    rows = sketches.where(F.col("card_i") > 0)
+    if tau == 1.0:
+        return rows.select("url_id", "card_i", F.col("card_i").alias("bkt")), None
     inv_log = 1.0 / math.log(1.0 / tau)
-    base = sketches.where(F.col("card_i") > 0).select(
+    base = rows.select(
         "url_id",
         "card_i",
         F.floor(F.log(F.col("card_i").cast("double")) * F.lit(inv_log)).alias("bkt"),

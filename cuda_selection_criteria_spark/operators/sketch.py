@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.spread import spread
 from ..oracle import DedupConfig
 from ..sketchlib.batch import (
     hll_batch,
@@ -132,9 +133,9 @@ def sketch_pages(
 
     Normally narrow (no shuffle): a 100 TB table arrives in thousands
     of splits. But a small/single-file input would serialize the whole
-    sketch pass on one core, so inputs with fewer partitions than the
-    cluster's parallelism are repartitioned first (tiny rows — url +
-    text only).
+    sketch pass on one core, so the narrow (url, text) projection goes
+    through ``spread`` (up to ``min_partitions``, default the cluster's
+    parallelism) first.
     """
     if id_mode not in ("dense", "hash"):  # validate FIRST: a typo must
         # raise on every path (streaming/passthrough included), not
@@ -146,24 +147,9 @@ def sketch_pages(
         id_col = F.xxhash64(F.col("url"))
     else:
         id_col = F.monotonically_increasing_id()
-    if pages.isStreaming:
-        # streaming sources size their own micro-batch partitions; no
-        # partition probe (inputFiles/rdd are undefined on streams)
-        src = pages.select("url", id_col.alias("url_id"), "text")
-        return src.mapInPandas(_sketch_batches(cfg), schema=sketch_schema(cfg))
-    if min_partitions is None:
-        min_partitions = pages.sparkSession.sparkContext.defaultParallelism
     narrow = ["url", "text"] + (["url_id"] if "url_id" in pages.columns else [])
-    src = pages.select(*narrow)
-    # partition-count probe: the PLANNED partitions, not the file count
-    # — Spark packs many small files into fewer splits (file count would
-    # overstate parallelism and skip a needed repartition) and splits
-    # large files into more. One .rdd access per sketch_pages call is
-    # plan-time only (no job); the RDD conversion is never executed.
-    n_parts = src.rdd.getNumPartitions()
-    if n_parts < min_partitions:
-        src = src.repartition(min_partitions)
     # id assigned AFTER the optional repartition so dense ids are a
     # function of the final (materialized) partition layout
+    src = spread(pages.select(*narrow), min_partitions)
     src = src.select("url", id_col.alias("url_id"), "text")
     return src.mapInPandas(_sketch_batches(cfg), schema=sketch_schema(cfg))

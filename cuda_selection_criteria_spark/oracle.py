@@ -1,5 +1,5 @@
-"""Pure-Python oracle: reference ``selection -c smh_a`` semantics over a
-web-page corpus, plus exact-Jaccard ground truth.
+"""Pure-Python oracle: reference ``selection`` semantics over a
+web-page corpus.
 
 Single-process, no Spark. This encodes the oracle binary's exact
 decision procedure (/root/reference/src/selection.cpp:241-300):
@@ -27,6 +27,9 @@ from .sketchlib import (
 from .sketchlib.hashes import shingle_hashes
 
 
+CRITERIA = ("smh_a", "hll_a", "hll_an", "cb")
+
+
 @dataclass(frozen=True)
 class DedupConfig:
     tau: float = 0.9
@@ -38,6 +41,16 @@ class DedupConfig:
     aux_p: int = 8  # aux HLL precision (256 B default -> p=8, selection.cpp:80)
     z_score: float = 1.96  # selection.cpp:76
     order_n: int = 1  # selection.cpp:77
+
+    def __post_init__(self) -> None:
+        if not 0.0 < self.tau <= 1.0:
+            raise ValueError(f"tau must be in (0, 1], got {self.tau!r}")
+        if self.criterion not in CRITERIA:
+            raise ValueError(f"unknown criterion {self.criterion!r}; one of {CRITERIA}")
+        if self.register_encoding not in ("sparse", "dense"):
+            raise ValueError(
+                f"unknown register_encoding {self.register_encoding!r}; sparse or dense"
+            )
 
     @property
     def bands(self) -> tuple[int, int]:
@@ -96,33 +109,10 @@ def oracle_dup_pairs(
                     cfg.tau, e1, e2, a1, a2, cfg.aux_p, cfg.z_score, cfg.order_n
                 ):
                     continue
-            elif cfg.criterion != "cb":
-                raise ValueError(f"unknown criterion {cfg.criterion}")
             t = union_cardinality(r1, r2, cfg.hll_p)
             jacc = (e1 + e2 - t) / t
             if jacc >= cfg.tau:
                 out.append((url1, url2, jacc))
-    return out
-
-
-def exact_jaccard_pairs(
-    docs: list[tuple[str, str]], cfg: DedupConfig = DedupConfig(), min_jaccard: float = 0.0
-) -> list[tuple[str, str, float]]:
-    """Exact shingle-set Jaccard for every pair (ground truth; O(N^2),
-    test corpora only)."""
-    sets = [(url, shingle_hashes(text, cfg.shingle_k)) for url, text in docs]
-    out = []
-    for i in range(len(sets)):
-        ui, si = sets[i]
-        for j in range(i + 1, len(sets)):
-            uj, sj = sets[j]
-            if si.size == 0 or sj.size == 0:
-                continue
-            inter = np.intersect1d(si, sj).size
-            union = si.size + sj.size - inter
-            jac = inter / union
-            if jac >= min_jaccard:
-                out.append((ui, uj, jac))
     return out
 
 

@@ -24,7 +24,6 @@ from .hll import (
     ertl_mle_batch,
     sum_counts,
     union_cardinality,
-    union_cardinality_batch,
 )
 from .smh import superminhash
 from .lsh import lsh_params
@@ -42,7 +41,6 @@ __all__ = [
     "ertl_mle_batch",
     "sum_counts",
     "union_cardinality",
-    "union_cardinality_batch",
     "superminhash",
     "lsh_params",
     "cb_select",

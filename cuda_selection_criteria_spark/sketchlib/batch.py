@@ -13,9 +13,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from .hashes import wyhash64_stream
-from .hll import ertl_mle_batch, hll_ranks
 from .hashes import wanghash64
+from .hll import ertl_mle_batch, hll_ranks
 
 U64 = np.uint64
 _M32 = U64(0xFFFFFFFF)
@@ -112,7 +111,6 @@ def superminhash_batch(
     n_docs: int,
     m: int,
     chunk: int = 8192,
-    depth0: int | None = None,
 ) -> np.ndarray:
     """SuperMinHash signatures for many documents at once.
 
@@ -121,24 +119,21 @@ def superminhash_batch(
     (ascending). Returns uint64[n_docs, m]. Bit-identical to per-doc
     ``smh.superminhash``.
 
-    Two-phase: a shallow walk (depth0 columns) covers almost every
-    (doc, slot) when docs have >> m items; docs with any uncovered slot
-    are re-run at full depth. This keeps the wyhash stream cost at
-    ~depth0/m of the naive cost.
+    Two-phase: a shallow walk (4 columns) covers almost every (doc,
+    slot) when docs have >> m items; docs with any uncovered slot are
+    re-run deeper. This keeps the wyhash stream cost at ~4/m of the
+    naive cost.
     """
     if m & (m - 1):
         raise ValueError(f"m must be a power of two, got {m}")
     items = np.asarray(items, dtype=U64)
     doc_idx = np.asarray(doc_idx, dtype=np.int64)
     out = np.full(n_docs * m, _U64MAX, dtype=U64)
-    if depth0 is None:
-        depth0 = 4 if m >= 16 else m
-    depth0 = min(depth0, m)
 
     has_items = np.zeros(n_docs, dtype=bool)
     has_items[doc_idx] = True
 
-    depth = depth0
+    depth = 4 if m >= 16 else m
     cur_items, cur_docs = items, doc_idx
     while True:
         # sparse history walk while depth^2 stays small vs the dense
@@ -231,7 +226,7 @@ def hll_batch(items: np.ndarray, doc_idx: np.ndarray, n_docs: int, p: int) -> np
     return regs
 
 
-def register_histograms(regs: np.ndarray, chunk: int = 256, buf: np.ndarray | None = None) -> np.ndarray:
+def register_histograms(regs: np.ndarray, chunk: int = 256) -> np.ndarray:
     """Per-row 64-bin histograms of register files, chunked with a
     reused int32 scratch buffer.
 
@@ -242,8 +237,7 @@ def register_histograms(regs: np.ndarray, chunk: int = 256, buf: np.ndarray | No
     """
     n, m = regs.shape
     hist = np.empty((n, 64), dtype=np.int64)
-    if buf is None:
-        buf = np.empty((min(chunk, n), m), dtype=np.int32)
+    buf = np.empty((min(chunk, n), m), dtype=np.int32)
     offs = (np.arange(min(chunk, n), dtype=np.int32) * 64)[:, None]
     for lo in range(0, n, chunk):
         hi = min(lo + chunk, n)

@@ -216,23 +216,3 @@ def shingle_hashes_batch(
     # the same allocation either way.
     return out_h[:wpos], out_d[:wpos]
 
-
-def word_shingle_hashes(text: str, k: int, dedup: bool = True) -> np.ndarray:
-    """k-word shingles (whitespace tokenization) hashed to u64.
-
-    Off-by-default alternative tokenizer (FIXTURES.md F2 allows either);
-    hashes the space-rejoined window with the same polynomial map.
-    """
-    toks = text.split()
-    if len(toks) < k:
-        return np.empty(0, dtype=U64)
-    joined = [" ".join(toks[i : i + k]).encode("utf-8") for i in range(len(toks) - k + 1)]
-    out = np.empty(len(joined), dtype=U64)
-    with np.errstate(over="ignore"):
-        for i, b in enumerate(joined):
-            a = np.frombuffer(b, dtype=np.uint8).astype(U64)
-            pw = _poly_powers(len(b)) if len(b) else np.empty(0, dtype=U64)
-            out[i] = splitmix64(np.sum(a * pw, dtype=U64))[()]
-    if dedup:
-        out = np.unique(out)
-    return out

@@ -52,17 +52,14 @@ def hll_ranks(hashes: np.ndarray, p: int) -> tuple[np.ndarray, np.ndarray]:
     return idx, rank
 
 
-def hll_build(elements: np.ndarray, p: int, prehashed: bool = False) -> np.ndarray:
-    """Fold 64-bit elements into a 2^p-register HLL (uint8 registers).
-
-    ``prehashed=False`` applies WangHash first (mirrors hll_t::addh).
-    """
+def hll_build(elements: np.ndarray, p: int) -> np.ndarray:
+    """Fold 64-bit elements into a 2^p-register HLL (uint8 registers),
+    WangHash first (mirrors hll_t::addh)."""
     regs = np.zeros(1 << p, dtype=np.uint8)
     el = np.asarray(elements, dtype=U64)
     if el.size == 0:
         return regs
-    h = el if prehashed else wanghash64(el)
-    idx, rank = hll_ranks(h, p)
+    idx, rank = hll_ranks(wanghash64(el), p)
     np.maximum.at(regs, idx, rank)
     return regs
 
@@ -76,8 +73,8 @@ def ertl_mle(counts: np.ndarray, p: int, q: int | None = None, relerr: float = 1
     """Ertl maximum-likelihood cardinality estimate.
 
     Direct port of the secant iteration in hll.h:629-688 / Ertl
-    arXiv:1702.01284 Algorithm 8. Scalar (per-sketch); the pipeline
-    batches by calling this over a small candidate set only.
+    arXiv:1702.01284 Algorithm 8. Scalar (per-sketch): the single-doc
+    oracle path; the Spark stages use ``ertl_mle_batch``.
     """
     if q is None:
         q = 64 - p
@@ -247,19 +244,3 @@ def union_cardinality(regs_a: np.ndarray, regs_b: np.ndarray, p: int) -> float:
     """union_size(): estimate over elementwise max registers (hll.h:1188-1210)."""
     return ertl_mle(sum_counts(np.maximum(regs_a, regs_b)), p)
 
-
-def union_cardinality_batch(regs_a: np.ndarray, regs_b: np.ndarray, p: int) -> np.ndarray:
-    """Union cardinalities for a batch of register pairs.
-
-    ``regs_a``, ``regs_b``: uint8 arrays of shape [B, 2^p]. The register
-    max + histogram are fully vectorized; the MLE secant runs per row
-    (cheap: ~64-entry histogram per pair).
-    """
-    mx = np.maximum(regs_a, regs_b)
-    B, m = mx.shape
-    # vectorized per-row histogram: offset each row into its own bin range
-    offsets = (np.arange(B, dtype=np.int64) * 64)[:, None]
-    flat = (mx.astype(np.int64) + offsets).ravel()
-    hist = np.bincount(flat, minlength=B * 64).reshape(B, 64)
-    p_ = int(np.log2(m))
-    return ertl_mle_batch(hist, p_)

@@ -34,8 +34,3 @@ def lsh_params(m: int, tau: float, target: float = 0.95) -> tuple[int, int]:
             break
     return n_bands, n_rows
 
-
-def collision_probability(m: int, n_bands: int, jaccard: float) -> float:
-    """P(at least one band collides) for a pair at the given Jaccard."""
-    r = m // n_bands
-    return 1.0 - (1.0 - jaccard**r) ** n_bands

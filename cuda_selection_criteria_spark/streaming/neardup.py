@@ -26,7 +26,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..oracle import DedupConfig
@@ -107,7 +106,7 @@ def streaming_band_candidates(
     micro-batches to service future timeouts and never terminates
     (measured: 36 empty batches in 60 s on a one-file drain).
     """
-    sk = sketch_pages(pages, cfg, min_partitions=1 if pages.isStreaming else None)
+    sk = sketch_pages(pages, cfg)
     bands = explode_bands(sk, cfg)
     timeout = (
         GroupStateTimeout.NoTimeout

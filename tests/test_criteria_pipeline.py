@@ -53,9 +53,58 @@ def test_cb_bucket_pairs_matches_bruteforce(spark):
     assert got == expect
 
 
+def test_cb_bucket_pairs_tau_one_pairs_equal_cards(spark):
+    """At tau=1 CB keeps exactly the pairs of equal positive cardinality
+    (regression: the log-bucket width 1/log(1/tau) divided by zero)."""
+    import random
+
+    from cuda_selection_criteria_spark.operators.candidates import cb_bucket_pairs
+
+    cfg = DedupConfig(tau=1.0, criterion="cb")
+    rng = random.Random(5)
+    cards = [rng.randint(0, 12) for _ in range(60)]
+    expect = {
+        (i, j)
+        for i in range(len(cards))
+        for j in range(i + 1, len(cards))
+        if cards[i] == cards[j] > 0
+    }
+    sk = spark.createDataFrame(list(enumerate(cards)), "url_id long, card_i long")
+    got = {(r.id_a, r.id_b) for r in cb_bucket_pairs(sk, cfg).collect()}
+    assert expect and got == expect
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"tau": 0.0},
+        {"tau": -0.5},
+        {"tau": 1.5},
+        {"criterion": "hll-an"},
+        {"criterion": "smh"},
+        {"register_encoding": "Sparse"},
+    ],
+    ids=["tau0", "tau_neg", "tau_gt1", "hll-an", "smh", "Sparse"],
+)
+def test_dedup_config_rejects_bad_values(bad):
+    with pytest.raises(ValueError):
+        DedupConfig(**bad)
+
+
+@pytest.mark.parametrize("criterion", ["cb", "hll_an"])
+def test_criterion_matches_oracle_at_tau_one(spark, criterion):
+    """tau=1 runs and agrees with the oracle (it used to divide by zero).
+    The verified set is empty on this corpus for both: a truncated-
+    cardinality HLL Jaccard rarely reaches exactly 1."""
+    _assert_matches_oracle(spark, DedupConfig(tau=1.0, criterion=criterion))
+
+
 @pytest.mark.parametrize("criterion", ["hll_a", "hll_an", "cb"])
 def test_criterion_matches_oracle(spark, criterion):
-    cfg = DedupConfig(criterion=criterion)
+    _assert_matches_oracle(spark, DedupConfig(criterion=criterion))
+
+
+def _assert_matches_oracle(spark, cfg):
     rows, _ = generate_pages(N_ROWS, SEED)
     expect = {
         tuple(sorted((a, b))): j

@@ -114,7 +114,7 @@ def test_verify_shared_url_id_uses_each_rows_own_blobs(spark):
     above), one shipped in the dense register layout: every verify row
     must score its OWN blobs, as the dense max + histogram does — the
     verify kernel's per-batch blob cache is keyed by content, not id."""
-    import dataclasses
+    from types import SimpleNamespace
 
     from cuda_selection_criteria_spark.operators.verify import verify_pairs
     from cuda_selection_criteria_spark.sketchlib.batch import (
@@ -145,7 +145,9 @@ def test_verify_shared_url_id_uses_each_rows_own_blobs(spark):
         [(1, 2, cards["a"], cards["b"]), (2, 2, cards["b"], cards["b"])],
         "id_a long, id_b long, card_a double, card_b double",
     )
-    keep_all = dataclasses.replace(CFG, tau=-1.0)  # Jaccard >= -1 always
+    # Jaccard >= -1 always; DedupConfig rejects tau <= 0, and verify
+    # reads only hll_p and tau
+    keep_all = SimpleNamespace(hll_p=p, tau=-1.0)
     got = sorted(
         (r.url_a, r.url_b, r.jaccard)
         for r in verify_pairs(cands, sketches, keep_all).collect()
@@ -287,7 +289,7 @@ def test_cb_max_bucket_drops_flooded_bucket(spark):
 
 def test_ertl_mle_batch_empty_batch():
     """Empty batches return an empty array (the listcomps this replaced
-    did); callers like cardinalities()/union_cardinality_batch must not
+    did); callers like cardinalities() and the verify UDF must not
     crash on zero-row inputs."""
     out = ertl_mle_batch(np.zeros((0, 64), dtype=np.int64), 14)
     assert out.shape == (0,)

@@ -83,9 +83,3 @@ def test_frame_sample(spark):
     rows = frame_sample(media, every_n=10).collect()
     for r in rows:
         assert r.frame_no % 10 == 0
-
-
-def test_media_real_codec_stubbed(spark):
-    media = synthetic_media(spark, n_rows=2)
-    with pytest.raises(NotImplementedError):
-        media_features(media, codec="real")
