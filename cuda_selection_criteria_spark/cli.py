@@ -6,7 +6,8 @@ Local:
   python -m cuda_selection_criteria_spark.cli dedup \
       --input /data/pages.parquet --warehouse /data/wh --tau 0.9 --m 64
 
-Cluster (north_rule launch shape):
+Cluster (north_rule launch shape): build the zip with
+``python tools/make_pyfiles.py`` first, then
   spark-submit --py-files cuda_selection_criteria_spark.zip \
       -m cuda_selection_criteria_spark.cli ... (or point spark-submit at
       this file); all heavy code ships in the zip, no cluster-side pip.
@@ -22,8 +23,6 @@ import argparse
 import json
 import sys
 import time
-
-from pyspark.sql import functions as F
 
 
 def _cfg(args):
@@ -41,11 +40,12 @@ def _cfg(args):
 def cmd_gen_corpus(args) -> None:
     from .pipeline import pages_from_corpus
     from .session import get_spark
+    from .warehouse import observe_rows
 
     spark = get_spark(master=args.master)
-    df = pages_from_corpus(spark, args.rows, args.seed, partitions=args.partitions)
+    df, obs = observe_rows(pages_from_corpus(spark, args.rows, args.seed, partitions=args.partitions))
     df.write.mode("overwrite").parquet(args.output)
-    print(json.dumps({"rows": df.count(), "output": args.output}))
+    print(json.dumps({"rows": obs.get["rows"], "output": args.output}))
 
 
 def cmd_sketch(args) -> None:
@@ -93,12 +93,10 @@ def cmd_dedup(args) -> None:
             salt_target=args.salt_target,
         )
     wh = Warehouse(spark, args.warehouse)
-    wh.write("dup_pairs", res.dup_pairs)
-    wh.write("clusters", res.clusters)
+    n_pairs = wh.write("dup_pairs", res.dup_pairs)
+    n_cluster_rows = wh.write("clusters", res.clusters)
     wall = time.time() - t0
     n_pages = pages.count()
-    n_pairs = wh.read("dup_pairs").count()
-    n_cluster_rows = wh.read("clusters").count()
     wh.log_metric("cli", "dedup_e2e", wall, n_pages, n_pairs, spark.sparkContext.defaultParallelism)
     print(
         json.dumps(
@@ -118,6 +116,7 @@ def cmd_textops(args) -> None:
     the library surface reachable from spark-submit without writing a
     driver script. ``--op`` selects the family; output is parquet."""
     from .session import get_spark
+    from .warehouse import observe_rows
 
     spark = get_spark(master=args.master)
     src = spark.read.parquet(args.input)
@@ -166,13 +165,13 @@ def cmd_textops(args) -> None:
         df = embedding_sim_pairs(src, min_sim=args.min_sim, method=args.sim_method)
     else:  # pragma: no cover - argparse choices guard this
         raise SystemExit(f"unknown op {args.op}")
+    df, obs = observe_rows(df)
     df.write.mode("overwrite").parquet(args.output)
-    out = spark.read.parquet(args.output)
     print(
         json.dumps(
             {
                 "op": args.op,
-                "rows": out.count(),
+                "rows": obs.get["rows"],
                 "output": args.output,
                 "wall_s": round(time.time() - t0, 2),
             }

@@ -30,8 +30,10 @@ is such a case: AQE coalesces its ~94 KB candidate shuffle into one
 task. Forcing ``repartition(defaultParallelism)`` before the payload
 joins was measured (layerbench ``parity_m64``, 4-core VM,
 ``local[3]``) to spread verify over 3 tasks, but total task time rose
-from 1.6 to 2.4 s and the dedup wall did not move — the dense verify
-kernel was memory-bound — so verify is deliberately left unspread.
+from 1.6 to 2.4 s and the dedup wall did not move, so verify is
+deliberately left unspread. That measurement predates the sparse
+``union_histograms`` verify kernel (the dense decode it timed was
+memory-bound) and was not repeated since.
 """
 
 from __future__ import annotations

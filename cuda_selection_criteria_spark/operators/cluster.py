@@ -85,41 +85,32 @@ def connected_components(
     Small-graph fast path: the dup graph AFTER verification is orders
     of magnitude smaller than the corpus (edges ~ duplicates, not
     documents), and at that size each large-star/small-star round is a
-    fixed scheduler round-trip, not compute. Edge sets at or under
-    ``local_threshold`` (default 1M edges — ~16 MB as two Arrow int64
-    columns, far under any sane driver heap) are fetched and solved
-    with union-find; the result contract (component-minimum cluster
-    ids) is identical and pinned by a parity test plus the driver's
-    DuckDB recursive-CTE closure gate. Above the threshold the Kiveris
-    alternation runs distributed; pass ``local_threshold=0`` to force it.
-    It raises ``RuntimeError`` when ``max_iter`` rounds end without a
-    fixed point.
+    fixed scheduler round-trip, not compute. One bounded Arrow fetch of
+    at most ``local_threshold + 1`` edges (default 1M edges — ~16 MB as
+    two int64 columns, far under any sane driver heap) decides: if it
+    holds every edge, union-find solves them on the driver; the result
+    contract (component-minimum cluster ids) is identical and pinned by
+    a parity test plus the driver's DuckDB recursive-CTE closure gate.
+    Otherwise the fetched rows are dropped, the edges are checkpointed
+    and the Kiveris alternation runs distributed; pass
+    ``local_threshold=0`` to force it. It raises ``RuntimeError`` when
+    ``max_iter`` rounds end without a fixed point.
     """
     edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).where(
         F.col("a") != F.col("b")
     )
-    edges = edges.localCheckpoint(eager=True)
-    if local_threshold:
-        # cheap bound probe first: a count over at most threshold+1
-        # checkpointed rows — nothing materializes on the driver when
-        # the graph turns out big. Only when it is small does the
-        # Arrow-batched toPandas fetch run (columnar int64, not 1M
-        # driver-side Row objects).
-        n_edges = edges.limit(local_threshold + 1).count()
-        if n_edges <= local_threshold:
-            import pandas as pd
+    # the limit caps the fetch at threshold+1 rows: a big graph costs
+    # the driver at most that much before it goes distributed
+    epdf = edges.limit(local_threshold + 1).toPandas()
+    if len(epdf) <= local_threshold:
+        import pandas as pd
 
-            epdf = edges.toPandas()
-            assigned = _local_union_find(
-                zip(epdf["a"].tolist(), epdf["b"].tolist())
-            )
-            spark = pairs.sparkSession
-            if not assigned:
-                return spark.createDataFrame([], "node long, cluster_id long")
-            return spark.createDataFrame(
-                pd.DataFrame(assigned, columns=["node", "cluster_id"]),
-                schema="node long, cluster_id long",
-            )
+        assigned = _local_union_find(zip(epdf["a"].tolist(), epdf["b"].tolist()))
+        return pairs.sparkSession.createDataFrame(
+            pd.DataFrame(assigned, columns=["node", "cluster_id"]),
+            schema="node long, cluster_id long",
+        )
+    edges = edges.localCheckpoint(eager=True)
     prev_sig = None
     for _ in range(max_iter):
         edges = _large_star(edges)

@@ -13,7 +13,8 @@ a catalog, e.g.::
       ...
 
 and construct ``IcebergWarehouse(spark, catalog="web", db="dedup")``.
-Same method surface as ``Warehouse``; differences that matter at
+Same method surface as ``Warehouse``, and the same lineage/metrics
+ledger (``warehouse.Ledger``); differences that matter at
 100 TB:
 
 - ``write(partition_by=...)`` declares Iceberg PARTITIONED BY, so
@@ -36,6 +37,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .warehouse import Ledger, observe_rows
+
 
 def available(spark: SparkSession, catalog: str) -> bool:
     """True iff an Iceberg SparkCatalog is configured and loadable."""
@@ -50,7 +53,7 @@ def available(spark: SparkSession, catalog: str) -> bool:
 
 
 @dataclass
-class IcebergWarehouse:
+class IcebergWarehouse(Ledger):
     spark: SparkSession
     catalog: str = "web"
     db: str = "dedup"
@@ -73,7 +76,9 @@ class IcebergWarehouse:
         df: DataFrame,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
-    ) -> None:
+    ) -> int:
+        """Write ``df`` to ``table``; returns the number of rows written."""
+        df, obs = observe_rows(df)
         w = df.writeTo(self.path(table))
         if partition_by:
             w = w.partitionedBy(*[F.col(c) for c in partition_by])
@@ -88,9 +93,7 @@ class IcebergWarehouse:
             w.append() if self.exists(table) else w.create()
         else:
             raise ValueError(f"unsupported mode {mode}")
-
-    def append_rows(self, table: str, rows: list[tuple], schema: str) -> None:
-        self.write(table, self.spark.createDataFrame(rows, schema=schema), mode="append")
+        return obs.get["rows"]
 
     def merge_rows(self, table: str, df: DataFrame, key_cols: list[str]) -> None:
         """Idempotent upsert (MERGE INTO) — the streaming foreachBatch
@@ -102,40 +105,4 @@ class IcebergWarehouse:
             f"MERGE INTO {self.path(table)} t USING {view} s ON {on} "
             "WHEN MATCHED THEN UPDATE SET * "
             "WHEN NOT MATCHED THEN INSERT *"
-        )
-
-    # lineage + metrics: identical logic to warehouse.Warehouse, over
-    # Iceberg tables (append-only fact tables)
-    def completed_parts(self, stage: str) -> set[int]:
-        if not self.exists("lineage"):
-            return set()
-        rows = (
-            self.read("lineage")
-            .where((F.col("stage") == stage) & (F.col("status") == "done"))
-            .select("part_id")
-            .distinct()
-            .collect()
-        )
-        return {r.part_id for r in rows}
-
-    def mark_parts(self, run_id: str, stage: str, parts: list[int], status: str = "done") -> None:
-        from datetime import datetime, timezone
-
-        from .warehouse import LINEAGE_SCHEMA
-
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        self.append_rows(
-            "lineage", [(run_id, int(p), stage, status, now) for p in parts], LINEAGE_SCHEMA
-        )
-
-    def log_metric(
-        self, run_id: str, stage: str, wall_s: float, rows_in: int, rows_out: int, parallelism: int
-    ) -> None:
-        from .warehouse import METRICS_SCHEMA
-
-        dps = rows_in / wall_s if wall_s > 0 else 0.0
-        self.append_rows(
-            "metrics",
-            [(run_id, stage, float(wall_s), int(rows_in), int(rows_out), float(dps), int(parallelism))],
-            METRICS_SCHEMA,
         )

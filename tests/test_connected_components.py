@@ -84,6 +84,28 @@ def test_local_fast_path_matches_distributed(spark):
     assert fast == dist and fast
 
 
+@pytest.mark.parametrize("extra", [0, 1], ids=["at_threshold", "above_threshold"])
+def test_local_threshold_boundary(spark, monkeypatch, extra):
+    """Exactly ``local_threshold`` edges stay local; one more goes
+    distributed. Both label like the forced distributed run."""
+    from cuda_selection_criteria_spark.operators import cluster
+
+    threshold = 40
+    rng = random.Random(3)
+    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(200)]
+    edges = [(a, b) for a, b in edges if a != b][: threshold + extra]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    calls = []
+    local = cluster._local_union_find
+    monkeypatch.setattr(
+        cluster, "_local_union_find", lambda rows: calls.append(1) or local(rows)
+    )
+    got = {tuple(r) for r in connected_components(df, local_threshold=threshold).collect()}
+    assert calls == ([1] if extra == 0 else [])
+    want = {tuple(r) for r in connected_components(df, local_threshold=0).collect()}
+    assert got == want and got
+
+
 def test_local_fast_path_empty_edges(spark):
     from cuda_selection_criteria_spark.operators import connected_components
 

@@ -1,17 +1,18 @@
-"""The committed spark-submit --py-files zip must match the source tree
-byte-for-byte — a stale artifact ships outdated worker code (the README
-documents `spark-submit --py-files cuda_selection_criteria_spark.zip`).
-Regenerate with `python tools/make_pyfiles.py` whenever the package
-changes; this test makes staleness a hard failure."""
+"""The spark-submit --py-files zip is built on demand with
+`python tools/make_pyfiles.py [out.zip]`, not committed. Building it must
+capture exactly the package's .py files, and the entry modules must
+import from that zip alone (the README documents
+`spark-submit --py-files cuda_selection_criteria_spark.zip`)."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "cuda_selection_criteria_spark"
-ZIP = os.path.join(ROOT, f"{PKG}.zip")
 
 
 def _tree_files():
@@ -25,14 +26,22 @@ def _tree_files():
     return out
 
 
-def test_pyfiles_zip_matches_source_tree():
-    assert os.path.exists(ZIP), "run: python tools/make_pyfiles.py"
-    tree = _tree_files()
-    with zipfile.ZipFile(ZIP) as zf:
-        names = set(zf.namelist())
-        assert names == set(tree), (
-            f"zip is stale: missing={set(tree) - names} "
-            f"extra={names - set(tree)} — run tools/make_pyfiles.py"
-        )
-        for name, body in tree.items():
-            assert zf.read(name) == body, f"zip is stale for {name}"
+def test_pyfiles_zip_builds_and_imports(tmp_path):
+    zpath = str(tmp_path / "x.zip")
+    subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "make_pyfiles.py"), zpath],
+        check=True,
+        capture_output=True,
+    )
+    with zipfile.ZipFile(zpath) as zf:
+        assert {n: zf.read(n) for n in zf.namelist()} == _tree_files()
+    # -I: no PYTHONPATH, user site or cwd on sys.path — only the zip
+    probe = (
+        "import sys; z = sys.argv[1]; sys.path.insert(0, z)\n"
+        f"import {PKG}.cli, {PKG}.pipeline\n"
+        f"for m in ({PKG}.cli, {PKG}.pipeline):\n"
+        "    assert m.__file__.startswith(z + '/'), m.__file__\n"
+    )
+    subprocess.run(
+        [sys.executable, "-I", "-c", probe, zpath], check=True, cwd=str(tmp_path)
+    )
