@@ -218,8 +218,9 @@ def main(argv=None) -> None:
             default=None,
             help="two-level salting of hot candidate buckets (band buckets, or "
             "log-cardinality buckets for hll_a/hll_an/cb): buckets larger than "
-            "this split into salt blocks (see candidate_pairs); star pairing "
-            "ignores it",
+            "this split into salt blocks (see candidate_pairs); for "
+            "hll_a/hll_an/cb this splits the CB tiles, each otherwise one "
+            "bucket held by one Python worker; star pairing ignores it",
         )
         s.add_argument(
             "--bucket-pairing",

@@ -15,7 +15,9 @@ Joining on the raw band slice (array<long>) makes hash collisions
 impossible by construction — band equality IS the join condition.
 The band join and the CB log-cardinality bucket join are one bucket
 self-join (``_bucket_pairs``) with one cap, one salting step and one
-CB prune.
+CB prune. For hll_a / hll_an / cb the pipeline runs ``cb_tile_pairs``
+instead: the same bucket sides, grouped, with CB, the aux criterion
+and verify in one numpy pass per bucket.
 
 Scale notes (north_rule):
 - band rows are (band_id, band slice, url_id, card_i) — no urls, no
@@ -55,8 +57,11 @@ def cb_bucket_pairs(
     adjacent buckets: the join is followed by an ``id_a < id_b`` filter,
     and a straddling pair whose lower-bucket doc has the larger url_id
     only survives in the (a=higher-bucket, b=lower-bucket) orientation.
-    The exact CB predicate re-filters after the join; dropDuplicates
-    collapses the same-bucket double match. When the criterion needs
+    The exact CB predicate re-filters after the join. Each pair meets
+    exactly once, in its side-a doc's own bucket (salted: on one (bkt,
+    sa, sb)), so the shared ``_bucket_pairs`` dropDuplicates, which the
+    band join needs (a pair can collide in several bands), removes
+    nothing here. When the criterion needs
     hll_aux blobs they are joined back AFTER the pair dedup (late
     payload attach: the 256 B blobs ride neither the bucket join, the
     salt explode nor the dedup exchange — at 10^10 CB-surviving pairs
@@ -73,6 +78,11 @@ def cb_bucket_pairs(
     (selection.cpp evaluates every CB-surviving pair); smh_a's banded
     LSH remains the 10^12-doc scale default, with salting making
     hll_a/hll_an *executable* at scale rather than straggler-bound.
+
+    This is the pair form. ``dedup_from_sketches``, and with it ``cli
+    dedup``, runs ``cb_tile_pairs``, which evaluates the same pairs
+    inside per-bucket tiles; this one stays because the layered
+    benchmark's traced run and the tests import it.
     """
     base, neighbours = _log_buckets(sketches, cfg.tau)
     pairs = _bucket_pairs(
@@ -94,20 +104,157 @@ def cb_bucket_pairs(
     return pairs
 
 
+# a-row x b-row evaluations per step of the tile kernel; bounds its
+# index arrays and the aux register rows it gathers per step
+_PAIR_CHUNK = 1 << 16
+
+
+def cb_tile_pairs(
+    sketches: DataFrame,
+    cfg: DedupConfig,
+    salt_target: int | None = None,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Verified pairs for the non-LSH criteria (hll_a / hll_an / cb):
+    ``cb_bucket_pairs`` -> ``aux_criterion_filter`` (hll_*) ->
+    ``verify_pairs(with_ids=True)`` in one grouped pass, the shape of
+    the reference's per-pair cascade (selection.cpp:270-291). Emits
+    (id_a, id_b, url_a, url_b, jaccard), the same rows as that chain.
+
+    The exchange groups per-document rows (url_id, card_i, url, hll14[,
+    hll_aux]) by log-cardinality bucket, each doc on its own bucket
+    and both neighbours (three rows a doc, one at tau=1). One numpy
+    pass per group then enumerates the a x b pairs with id_a < id_b
+    that pass CB, in chunks of ``_PAIR_CHUNK``, applies the aux
+    criterion to the group's own aux registers and verifies the
+    survivors with the verify stage's kernel. Each sketch is shipped
+    once per bucket row, not twice per candidate pair.
+
+    ``max_bucket`` and ``salt_target`` are ``_bucket_sides``' cap and
+    salting. Salted groups are keyed (bkt, sa, sb) and rows carry their
+    a/b role, so each pair is evaluated in exactly one group, as in the
+    join. Trade: without ``salt_target`` one bucket is one group, held
+    whole by one Python worker at about 5 KB a row (the p=14 blob);
+    ``salt_target`` bounds it, as hll_* at scale needs anyway. Salting
+    ships each row of a bucket split s ways s times, blob included, and
+    makes s^2 groups of it, so a target of a few rows costs far more
+    than it saves: keep it near the largest group a worker should hold.
+    """
+    from .verify import VERIFY_SCHEMA_IDS
+
+    payload = ["url", "hll14"]
+    if cfg.criterion in ("hll_a", "hll_an"):
+        payload.append("hll_aux")
+    base, neighbours = _log_buckets(sketches, cfg.tau, payload)
+    a, b, key = _bucket_sides(
+        base.withColumn("own", F.col("bkt")),
+        ["bkt"],
+        neighbours,
+        salt_target,
+        max_bucket,
+        ["own", *payload],
+    )
+    salted = key != ["bkt"]
+
+    def rows(side: DataFrame, s: str, is_a: Column, is_b: Column) -> DataFrame:
+        return side.select(
+            *key,
+            F.col(f"id_{s}").alias("url_id"),
+            F.col(f"card_{s}").alias("card_i"),
+            *payload,
+            is_a.alias("is_a"),
+            is_b.alias("is_b"),
+        )
+
+    # a doc's b row on its own bucket is also its a row (salted: on the
+    # one (sa, sb) both its salts pick), so only side a's other rows ship
+    same = F.col("sa") == F.col("sb") if salted else F.lit(True)
+    tiles = rows(b, "b", (F.col("bkt") == F.col("own")) & same, F.lit(True))
+    if salted:
+        tiles = tiles.unionByName(rows(a.where(~same), "a", F.lit(True), F.lit(False)))
+    # the plain groupBy exchange: AQE sizes it, and an explicit-width
+    # repartition on the key measured slower
+    return tiles.groupBy(*key).applyInPandas(_tile_kernel(cfg), schema=VERIFY_SCHEMA_IDS)
+
+
+def _tile_kernel(cfg: DedupConfig):
+    import numpy as np
+    import pandas as pd
+
+    from ..sketchlib.criteria import aux_select_batch
+    from .verify import _verify_batches
+
+    verify = _verify_batches(cfg, with_ids=True)
+    crit, tau = cfg.criterion, cfg.tau
+    aux = crit in ("hll_a", "hll_an")
+    m = 1 << cfg.aux_p
+    chunk = _PAIR_CHUNK
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows_a = np.flatnonzero(pdf["is_a"].values)
+        rows_b = np.flatnonzero(pdf["is_b"].values)
+        ids = pdf["url_id"].values
+        cards = pdf["card_i"].values
+        fcards = cards.astype(np.float64)
+        if aux:
+            regs = np.frombuffer(b"".join(pdf["hll_aux"]), dtype=np.uint8)
+            regs = regs.reshape(len(pdf), m)
+        step = max(1, chunk // max(len(rows_b), 1))
+        keep_a, keep_b = [], []
+        for lo in range(0, len(rows_a), step):
+            part = rows_a[lo : lo + step]
+            ia = np.repeat(part, len(rows_b))
+            ib = np.tile(rows_b, len(part))
+            ca, cb = fcards[ia], fcards[ib]
+            ok = (ids[ia] < ids[ib]) & (np.minimum(ca, cb) / np.maximum(ca, cb) >= tau)
+            ia, ib = ia[ok], ib[ok]
+            if aux and len(ia):
+                ok = aux_select_batch(
+                    crit, tau, cards[ia], cards[ib], regs[ia], regs[ib],
+                    cfg.aux_p, cfg.z_score, cfg.order_n,
+                )
+                ia, ib = ia[ok], ib[ok]
+            keep_a.append(ia)
+            keep_b.append(ib)
+        if not keep_a:
+            return pd.DataFrame()  # an empty result may have no columns
+        ia, ib = np.concatenate(keep_a), np.concatenate(keep_b)
+        urls, blobs = pdf["url"].values, pdf["hll14"].values
+        pairs = pd.DataFrame(
+            {
+                "id_a": ids[ia],
+                "id_b": ids[ib],
+                "url_a": urls[ia],
+                "url_b": urls[ib],
+                "card_a": cards[ia],
+                "card_b": cards[ib],
+                "hll_a": blobs[ia],
+                "hll_b": blobs[ib],
+            }
+        )
+        out = list(
+            verify(pairs.iloc[lo : lo + chunk] for lo in range(0, len(pairs), chunk))
+        )
+        return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
+
+    return fn
+
+
 def _log_buckets(
-    sketches: DataFrame, tau: float
+    sketches: DataFrame, tau: float, carry: list[str] = ()
 ) -> tuple[DataFrame, list[Column] | None]:
-    """sketches -> (url_id, card_i, bkt) rows with bkt =
+    """sketches -> (url_id, card_i, *carry, bkt) rows with bkt =
     floor(log_(1/tau) card_i), and the b-side key that puts each doc in
     its own bucket and both neighbours. At tau == 1 CB keeps only equal
     cardinalities, so bkt is card_i itself and side b stays on it."""
     rows = sketches.where(F.col("card_i") > 0)
     if tau == 1.0:
-        return rows.select("url_id", "card_i", F.col("card_i").alias("bkt")), None
+        return rows.select("url_id", "card_i", *carry, F.col("card_i").alias("bkt")), None
     inv_log = 1.0 / math.log(1.0 / tau)
     base = rows.select(
         "url_id",
         "card_i",
+        *carry,
         F.floor(F.log(F.col("card_i").cast("double")) * F.lit(inv_log)).alias("bkt"),
     )
     bkt = F.col("bkt")
@@ -125,48 +272,34 @@ def _cb_keep(tau: float) -> Column:
 
 def aux_criterion_filter(pairs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """hll_a / hll_an pair predicate over joined aux register blobs
-    (criteria_sketch.hpp:52-64), vectorized per Arrow batch."""
+    (criteria_sketch.hpp:52-64), vectorized per Arrow batch.
+
+    The pair form, for ``cb_bucket_pairs``' output: ``cb_tile_pairs``
+    applies the same predicate (``sketchlib.criteria.aux_select_batch``)
+    inside its tiles, and the pipeline uses that. This one stays for
+    the layered benchmark's traced run and the tests."""
     from collections.abc import Iterator
 
     import numpy as np
     import pandas as pd
 
-    from ..sketchlib.batch import register_histograms
-    from ..sketchlib.criteria import sigma
-    from ..sketchlib.hll import ertl_mle_batch
+    from ..sketchlib.criteria import aux_select_batch
 
     p = cfg.aux_p
     m = 1 << p
-    tau, z, order_n = cfg.tau, cfg.z_score, cfg.order_n
-    crit = cfg.criterion
     schema = "id_a long, id_b long, card_a long, card_b long"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sigma_p = sigma(p)
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
             ra = np.frombuffer(b"".join(pdf["aux_a"]), dtype=np.uint8).reshape(n, m)
             rb = np.frombuffer(b"".join(pdf["aux_b"]), dtype=np.uint8).reshape(n, m)
-            hist = register_histograms(np.maximum(ra, rb))
-            t_hat = ertl_mle_batch(hist, p)
-            ca = np.minimum(pdf["card_a"].values, pdf["card_b"].values).astype(np.float64)
-            cb = np.maximum(pdf["card_a"].values, pdf["card_b"].values).astype(np.float64)
-            gamma = ca / cb
-            if crit == "hll_a":
-                t = np.floor(t_hat)  # size_t truncation (criteria_sketch.hpp:61)
-                t_mas = t / (1.0 + z * sigma_p)
-                keep = ((1.0 + gamma) * cb - t_mas) / t_mas >= tau
-            else:  # hll_an
-                j_hat = (ca + cb - t_hat) / t_hat
-                s = 0.0
-                num = 1.0
-                for _ in range(order_n):
-                    num *= z * sigma_p
-                    s += num
-                minimo = np.minimum(1.0, (1.0 + z * sigma_p) * cb / t_hat)
-                keep = (j_hat + minimo * (1.0 + gamma) * s) >= tau
+            keep = aux_select_batch(
+                cfg.criterion, cfg.tau, pdf["card_a"].values, pdf["card_b"].values,
+                ra, rb, p, cfg.z_score, cfg.order_n,
+            )
             out = pdf.loc[keep, ["id_a", "id_b", "card_a", "card_b"]]
             if len(out):
                 yield out
@@ -282,10 +415,11 @@ def _bucket_sides(
     b_key: list[Column] | None,
     salt_target: int | None,
     max_bucket: int | None,
+    carry: list[str] = (),
 ) -> tuple[DataFrame, DataFrame, list[str]]:
-    """Rows (key..., url_id, card_i) -> the two sides of the bucket
-    self-join, (join key..., id_a, card_a) and (join key..., id_b,
-    card_b), and the join key.
+    """Rows (key..., url_id, card_i, *carry) -> the two sides of the
+    bucket self-join, (join key..., id_a, card_a, *carry) and (join
+    key..., id_b, card_b, *carry), and the join key.
 
     Side a sits on ``key``; side b on ``b_key`` (``None``: ``key``
     itself), which may explode one row onto several keys.
@@ -311,10 +445,13 @@ def _bucket_sides(
         )
         base = base.join(F.broadcast(over), key, "left_anti")
     a = base.select(
-        *key, F.col("url_id").alias("id_a"), F.col("card_i").alias("card_a")
+        *key, F.col("url_id").alias("id_a"), F.col("card_i").alias("card_a"), *carry
     )
     b = base.select(
-        *(b_key or key), F.col("url_id").alias("id_b"), F.col("card_i").alias("card_b")
+        *(b_key or key),
+        F.col("url_id").alias("id_b"),
+        F.col("card_i").alias("card_b"),
+        *carry,
     )
     if salt_target is None:
         return a, b, key
@@ -335,6 +472,7 @@ def _bucket_sides(
         all_salts.alias("sb"),
         "id_a",
         "card_a",
+        *carry,
     )
     b = b.join(F.broadcast(hot), key, "left").select(
         *key,
@@ -342,6 +480,7 @@ def _bucket_sides(
         F.pmod(F.xxhash64("id_b"), s).cast("int").alias("sb"),
         "id_b",
         "card_b",
+        *carry,
     )
     return a, b, [*key, "sa", "sb"]
 

@@ -45,6 +45,10 @@ def dedup_from_sketches(
     pages. E2 of the reference (selection.cpp loads sidecar sketches,
     never re-reads sequences) — same shape.
     """
+    # with_ids: CC edges reuse the sketch table's surrogate ids instead
+    # of re-hashing urls (xxhash64(url) here would reintroduce the
+    # 64-bit silent-merge hazard the dense id spine closes — two
+    # colliding urls would fuse into one CC node at 10^12-doc scale)
     if cfg.criterion == "smh_a":
         cands = candidate_pairs(
             sketches,
@@ -53,23 +57,17 @@ def dedup_from_sketches(
             bucket_pairing=bucket_pairing,
             salt_target=salt_target,
         )
+        verified = verify_pairs(cands, sketches, cfg, with_ids=True)
     else:
-        from .operators.candidates import aux_criterion_filter, cb_bucket_pairs
+        from .operators.candidates import cb_tile_pairs
 
-        # same flood knobs as the smh path: salt_target spreads hot
+        # CB, the aux criterion and verify in one pass per bucket tile;
+        # same flood knobs as the smh path: salt_target splits hot
         # log-cardinality buckets, max_band_bucket drops them outright
-        cands = cb_bucket_pairs(
+        verified = cb_tile_pairs(
             sketches, cfg, salt_target=salt_target, max_bucket=max_band_bucket
         )
-        if cfg.criterion in ("hll_a", "hll_an"):
-            cands = aux_criterion_filter(cands, cfg)
-    # with_ids: CC edges reuse the sketch table's surrogate ids instead
-    # of re-hashing urls (xxhash64(url) here would reintroduce the
-    # 64-bit silent-merge hazard the dense id spine closes — two
-    # colliding urls would fuse into one CC node at 10^12-doc scale)
-    verified = verify_pairs(cands, sketches, cfg, with_ids=True).localCheckpoint(
-        eager=True
-    )
+    verified = verified.localCheckpoint(eager=True)
     dup_pairs = verified.select("url_a", "url_b", "jaccard")
     edges = verified.select("id_a", "id_b")
     comp = connected_components(edges)

@@ -12,7 +12,8 @@ import math
 
 import numpy as np
 
-from .hll import union_cardinality
+from .batch import register_histograms
+from .hll import ertl_mle_batch, union_cardinality
 
 
 def sigma(p: int) -> float:
@@ -93,3 +94,39 @@ def hll_an_select(
     j_hat = (card_a + card_b - t_hat) / t_hat
     c = _cota_n(card_a, card_b, t_hat, p, z, order_n)
     return (j_hat + c) >= tau
+
+
+def aux_select_batch(
+    criterion: str,
+    tau: float,
+    card_a: np.ndarray,
+    card_b: np.ndarray,
+    regs_a: np.ndarray,
+    regs_b: np.ndarray,
+    p: int,
+    z: float = 1.96,
+    order_n: int = 1,
+) -> np.ndarray:
+    """``hll_a_select`` / ``hll_an_select`` over a batch of pairs: bool
+    keep mask. ``regs_a``/``regs_b`` are uint8 [n, 2^p] aux register
+    rows, the cards size_t-truncated; either side may hold the larger
+    card. Row for row the same float operations as the scalar forms."""
+    t_hat = ertl_mle_batch(register_histograms(np.maximum(regs_a, regs_b)), p)
+    ca = np.minimum(card_a, card_b).astype(np.float64)
+    cb = np.maximum(card_a, card_b).astype(np.float64)
+    gamma = ca / cb
+    sigma_p = sigma(p)
+    if criterion == "hll_a":
+        t = np.floor(t_hat)  # size_t truncation (criteria_sketch.hpp:61)
+        t_mas = t / (1.0 + z * sigma_p)
+        return ((1.0 + gamma) * cb - t_mas) / t_mas >= tau
+    if criterion == "hll_an":
+        j_hat = (ca + cb - t_hat) / t_hat
+        s = 0.0
+        num = 1.0
+        for _ in range(order_n):
+            num *= z * sigma_p
+            s += num
+        minimo = np.minimum(1.0, (1.0 + z * sigma_p) * cb / t_hat)
+        return (j_hat + minimo * (1.0 + gamma) * s) >= tau
+    raise ValueError(f"no aux criterion {criterion!r}; hll_a or hll_an")

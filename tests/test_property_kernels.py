@@ -9,6 +9,7 @@ transport must roundtrip losslessly at every density.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from cuda_selection_criteria_spark.sketchlib.batch import (
@@ -25,7 +26,12 @@ from cuda_selection_criteria_spark.sketchlib.hashes import (
     shingle_hashes,
     shingle_hashes_batch,
 )
-from cuda_selection_criteria_spark.sketchlib.hll import hll_build
+from cuda_selection_criteria_spark.sketchlib.criteria import (
+    aux_select_batch,
+    hll_a_select,
+    hll_an_select,
+)
+from cuda_selection_criteria_spark.sketchlib.hll import hll_build, hll_cardinality
 from cuda_selection_criteria_spark.sketchlib.smh import superminhash
 
 _texts = st.lists(
@@ -146,3 +152,57 @@ def test_union_histograms_equal_dense_reference(docs, pairs, p, seed):
 
 def test_union_histograms_no_pairs():
     assert union_histograms([], [], 14).shape == (0, 64)
+
+
+def _aux_case(seed, criterion, p, n, tau, z, order_n):
+    """n pairs of aux HLLs over overlapping random item sets, cards near
+    each doc's own estimate -> (batch keep mask, scalar keep list)."""
+    rng = np.random.default_rng(seed)
+    pool = rng.integers(0, 2**63, size=800, dtype=np.uint64)
+    regs, cards = [], []
+    for _ in range(2 * n):
+        items = rng.choice(pool, size=int(rng.integers(1, 600)), replace=False)
+        r = hll_build(items, p)
+        regs.append(r)
+        cards.append(max(1, int(hll_cardinality(r, p) * rng.uniform(0.7, 1.3))))
+    ra, rb = np.stack(regs[0::2]), np.stack(regs[1::2])
+    ca, cb = np.array(cards[0::2]), np.array(cards[1::2])
+    got = aux_select_batch(criterion, tau, ca, cb, ra, rb, p, z, order_n)
+    expect = []
+    for i in range(n):
+        lo, hi = min(ca[i], cb[i]), max(ca[i], cb[i])
+        if criterion == "hll_a":
+            expect.append(hll_a_select(tau, lo, hi, ra[i], rb[i], p, z))
+        else:
+            expect.append(hll_an_select(tau, lo, hi, ra[i], rb[i], p, z, order_n))
+    return got, expect
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.sampled_from(["hll_a", "hll_an"]),
+    st.sampled_from([4, 6, 8]),
+    st.integers(min_value=1, max_value=12),
+    st.integers(min_value=0, max_value=2**32 - 1),
+    st.sampled_from([0.5, 0.9, 1.0]),
+    st.sampled_from([1.0, 1.96]),
+    st.integers(min_value=1, max_value=3),
+)
+def test_aux_select_batch_equals_scalar(criterion, p, n, seed, tau, z, order_n):
+    got, expect = _aux_case(seed, criterion, p, n, tau, z, order_n)
+    assert got.dtype == np.bool_
+    assert got.tolist() == expect
+
+
+@pytest.mark.parametrize("criterion", ["hll_a", "hll_an"])
+def test_aux_select_batch_keeps_and_drops(criterion):
+    """Non-vacuous: on a fixed draw the predicate splits the pairs."""
+    got, expect = _aux_case(3, criterion, 8, 300, 0.9, 1.96, 1)
+    assert got.tolist() == expect
+    assert got.any() and not got.all()
+
+
+def test_aux_select_batch_rejects_other_criteria():
+    one = np.ones((1, 16), dtype=np.uint8)
+    with pytest.raises(ValueError):
+        aux_select_batch("cb", 0.9, np.array([5]), np.array([5]), one, one, 4)
