@@ -82,11 +82,10 @@ def _q_dup_pairs_smh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dup_clusters_smh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relabel components with their minimum URL: the pipeline's internal
-    # cluster_id is the minimum DENSE surrogate id, whose value depends
-    # on partition layout (defaultParallelism / file-split planning) —
-    # fine inside one job, but the recorded query output should be a
-    # pure function of content so the row set is stable across
-    # environments. (url, cluster_key) partitions identically.
+    # cluster_id is the component's minimum surrogate id, a pure function
+    # of content but an engine-internal number; the recorded query
+    # output, (url, cluster_key), names each cluster by content the
+    # oracle can compute. It partitions identically.
     clusters = dedup_pipeline(_docs_as_pages(spark, sf_dir), _dedup_cfg()).clusters
     keys = clusters.groupBy("cluster_id").agg(F.min("url").alias("cluster_key"))
     return clusters.join(keys, "cluster_id").select("url", "cluster_key")
@@ -435,11 +434,11 @@ def _q_streaming_batch_cc_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_pairs = run_available_now(
         cands, f"neardup_gate_{uuid.uuid4().hex[:8]}", expect_single_batch=True
     ).dropDuplicates(["id_a", "id_b"])
-    # id_mode="hash": the diff compares node ids across two INDEPENDENT
-    # materializations (stream vs batch), so both sides need the
-    # pure-function id (streaming always hashes; dense batch ids would
-    # live in a different id space and the diff would fire everywhere)
-    sk = sketch_pages(_docs_as_pages(spark, sf_dir), cfg, id_mode="hash")
+    # the diff compares node ids across stream and batch, so the batch
+    # side passes through the id a stream assigns, xxhash64(url) (batch
+    # ids live in another id space and the diff would fire everywhere)
+    pages = _docs_as_pages(spark, sf_dir)
+    sk = sketch_pages(pages.withColumn("url_id", F.xxhash64("url")), cfg)
     batch_pairs = candidate_pairs(sk, cfg, bucket_pairing="star")
     return cc_diff_gate(stream_pairs, batch_pairs)
 

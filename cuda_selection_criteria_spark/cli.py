@@ -200,7 +200,7 @@ def main(argv=None) -> None:
         s.add_argument("--tau", type=float, default=0.9)
         s.add_argument("--shingle-k", type=int, default=31)
         s.add_argument("--m", type=int, default=64)
-        s.add_argument("--parts", type=int, default=32)
+        s.add_argument("--parts", type=int, default=32, help="resume parts: a power of two, at most 65,536")
         s.add_argument(
             "-c",
             "--criterion",

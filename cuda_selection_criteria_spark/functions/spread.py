@@ -14,7 +14,9 @@ from input, don't tune a constant): big inputs are untouched (no extra
 exchange at scale), small inputs pay one tiny exchange (the bench
 tables are ~5-15 MB) to buy a parallelism-wide map stage. The sketch
 stage (``operators/sketch.py``) spreads its (url, text) projection
-through this same helper.
+through this same helper with a key: its id exchange hash-partitions
+on the id part at the same width rule, so it spreads a narrow input
+and keeps a wide one's width.
 
 Results are partitioning-independent by construction everywhere this
 is applied (groupBy/join keys, per-row projections, pure-function
@@ -38,12 +40,18 @@ memory-bound) and was not repeated since.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame, min_partitions: int | None = None, key: Column | None = None) -> DataFrame:
     """Repartition ``df`` up to cluster parallelism if it is planned
-    narrower; no-op for streaming inputs and already-wide inputs."""
+    narrower; no-op for streaming inputs and already-wide inputs.
+
+    With a ``key`` it always hash-repartitions on it, at
+    ``max(min_partitions, planned partitions)``: a caller that needs its
+    rows clustered by the key gets that exchange, as wide as the input
+    or the cluster, whichever is wider. The width is explicit because an
+    AQE-sized exchange coalesces a small input into one task."""
     if df.isStreaming:
         return df
     sc = df.sparkSession.sparkContext
@@ -52,6 +60,9 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     # planned partitions, not file count: Spark packs small files into
     # fewer splits and splits large files into more (plan-time only —
     # the .rdd conversion is never executed)
-    if df.rdd.getNumPartitions() < min_partitions:
+    n = df.rdd.getNumPartitions()
+    if key is not None:
+        return df.repartition(max(min_partitions, n), key)
+    if n < min_partitions:
         return df.repartition(min_partitions)
     return df

@@ -1,9 +1,9 @@
-"""Sketch stage: pages -> per-document sketches, one narrow mapInPandas pass.
+"""Sketch stage: pages -> per-document sketches, one id exchange and one mapInPandas pass.
 
 Replaces the reference's E1 ``build_sketch`` entry point
 (/root/reference/src/build_sketch.cpp:186-295). Shingling, WangHash,
 HLL fold, SuperMinHash and Ertl-MLE cardinality are FUSED per Arrow
-batch — no shuffle, no per-row Python (all heavy math in the batched
+batch — no per-row Python (all heavy math in the batched
 numpy kernels, sketchlib/batch.py).
 
 Output schema (FIXTURES.md F2):
@@ -11,23 +11,27 @@ Output schema (FIXTURES.md F2):
   hll14 binary, smh array<long>
 
 ``url_id`` is a narrow 64-bit surrogate used to keep band-explode rows
-small at 10^12-doc scale. Two assignment modes (``id_mode``):
+small at 10^12-doc scale. One rule in ``sketch_pages`` assigns it to
+every batch input, so the in-memory pipeline and the resumable warehouse
+(``warehouse.sketch_with_resume``) give a document the same id:
 
-- ``"dense"`` (batch default): ``monotonically_increasing_id()`` —
-  collision-FREE by construction (partition index in the high bits,
-  per-partition counter in the low bits). A 64-bit *hash* surrogate
-  silently merges ~n^2/2^65 url pairs (~2.7e4 expected collisions at
-  10^12 docs, each conflating two documents in the band join, verify
-  join and connected components); dense ids close that hazard without
-  widening the shuffle key. Dense ids are assigned at materialization:
-  the pipeline localCheckpoints sketches and the warehouse persists
-  them (with part-scoped resume-stable ids, warehouse.py), so every
-  downstream join sees one consistent assignment.
-- ``"hash"``: ``xxhash64(url)`` — a pure function of the row. Required
-  where ids must be reproducible across independent materializations:
-  streaming (state keyed across micro-batches; collision exposure is
-  bounded by the TTL'd active horizon, not the full crawl) and
-  differential gates that compare two independently-built id spaces.
+  url_id = (part << 40) | rank,  part = pmod(xxhash64(url), ID_PARTS)
+
+where ``rank`` is the row's 0-based place in its part, ordered by
+``(url, xxhash64(text))``. It is a pure function of content — not of
+partition layout, core count or resume points — and collision-free by
+construction (2^16 parts x 2^40 rows per part covers 10^12 documents at
+up to 65,536 sketch tasks), where a 64-bit url *hash* would silently
+merge ~n^2/2^65 url pairs (~2.7e4 at 10^12 docs), each conflating two
+documents in the band join, verify join and connected components.
+Cost: one hash exchange of ``(url, text)`` on ``part`` (which also
+spreads a narrow input over the cluster) and a sort within each task.
+
+An input ``url_id`` column is passed through untouched (the collision
+tests and differential gates use this). A stream keeps
+``xxhash64(url)``: it cannot take a window, and its state is keyed
+across micro-batches (collision exposure is bounded by the TTL'd active
+horizon, not the full crawl).
 
 ``card_i`` preserves the oracle binary's size_t truncation
 (/root/reference/src/selection.cpp:275).
@@ -40,7 +44,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.spread import spread
@@ -56,6 +60,7 @@ SKETCH_SCHEMA = (
     "url string, url_id long, card double, card_i long, hll14 binary, smh array<long>"
 )
 SKETCH_SCHEMA_AUX = SKETCH_SCHEMA + ", hll_aux binary"
+ID_PARTS = 1 << 16  # url_id = (part << 40) | rank-within-part
 
 
 def sketch_schema(cfg: DedupConfig) -> str:
@@ -115,41 +120,27 @@ def sketch_pages(
     pages: DataFrame,
     cfg: DedupConfig = DedupConfig(),
     min_partitions: int | None = None,
-    id_mode: str = "dense",
 ) -> DataFrame:
     """pages(url, text, ...) -> sketches DataFrame.
 
-    Catalyst prunes every column except url/text at the scan.
-
-    ``id_mode`` (see module docstring): ``"dense"`` (default) assigns
-    collision-free monotonically-increasing surrogate ids at
-    materialization; ``"hash"`` uses the pure-function xxhash64(url).
-    Streaming inputs always use ``"hash"`` — dense ids restart their
-    partition counters every micro-batch, which would collide ACROSS
-    batches exactly where the stateful operators key on url_id.
-    If ``pages`` already carries a ``url_id`` column it is passed
-    through untouched (caller-controlled id space; the collision-
-    injection tests use this).
-
-    Normally narrow (no shuffle): a 100 TB table arrives in thousands
-    of splits. But a small/single-file input would serialize the whole
-    sketch pass on one core, so the narrow (url, text) projection goes
-    through ``spread`` (up to ``min_partitions``, default the cluster's
-    parallelism) first.
+    Catalyst prunes every column except url/text (and a passed-through
+    url_id) at the scan. A batch input gets its ids (module docstring)
+    through one hash exchange on the id part, ``spread`` to at least
+    ``min_partitions`` (default the cluster's parallelism) and never
+    fewer than the input's planned partitions: a single-split input is
+    spread over the cluster, a wide one keeps its width. At scale that
+    is one exchange of ``(url, text)`` a narrow pass would not need, the
+    price of ids that do not follow the layout.
     """
-    if id_mode not in ("dense", "hash"):  # validate FIRST: a typo must
-        # raise on every path (streaming/passthrough included), not
-        # silently fall back to hashing
-        raise ValueError(f"unknown id_mode: {id_mode!r}")
-    if "url_id" in pages.columns:
-        id_col = F.col("url_id")
-    elif pages.isStreaming or id_mode == "hash":
-        id_col = F.xxhash64(F.col("url"))
+    has_id = "url_id" in pages.columns
+    src = pages.select("url", "text", *(["url_id"] if has_id else []))
+    if pages.isStreaming:  # a stream cannot take the window
+        id_col = F.xxhash64("url")
     else:
-        id_col = F.monotonically_increasing_id()
-    narrow = ["url", "text"] + (["url_id"] if "url_id" in pages.columns else [])
-    # id assigned AFTER the optional repartition so dense ids are a
-    # function of the final (materialized) partition layout
-    src = spread(pages.select(*narrow), min_partitions)
-    src = src.select("url", id_col.alias("url_id"), "text")
+        part = F.pmod(F.xxhash64("url"), F.lit(ID_PARTS))
+        src = spread(src, min_partitions, key=part)
+        # same partitioning as the exchange: the window adds none
+        rank = F.row_number().over(Window.partitionBy(part).orderBy("url", F.xxhash64("text")))
+        id_col = F.shiftleft(part.cast("long"), 40) + rank - 1
+    src = src.select("url", "url_id" if has_id else id_col.alias("url_id"), "text")
     return src.mapInPandas(_sketch_batches(cfg), schema=sketch_schema(cfg))

@@ -89,7 +89,7 @@ def verify_pairs(
     (connected components, pipeline.py) reuse the SAME ids the
     candidate join used instead of re-deriving ids by hashing urls —
     re-hashing would silently reintroduce the 64-bit collision hazard
-    the dense id spine exists to close.
+    the collision-free url_id exists to close.
     """
     payload = sketches.select("url_id", "url", "hll14")
     joined = (

@@ -47,7 +47,7 @@ def dedup_from_sketches(
     """
     # with_ids: CC edges reuse the sketch table's surrogate ids instead
     # of re-hashing urls (xxhash64(url) here would reintroduce the
-    # 64-bit silent-merge hazard the dense id spine closes — two
+    # 64-bit silent-merge hazard the collision-free url_id closes — two
     # colliding urls would fuse into one CC node at 10^12-doc scale)
     if cfg.criterion == "smh_a":
         cands = candidate_pairs(
@@ -89,9 +89,10 @@ def dedup_pipeline(
     """pages(url, text, ...) -> sketches, dup_pairs(url_a,url_b,jaccard),
     clusters(url, cluster_id).
 
-    The sketches are materialized once: the sketch pass then runs once,
-    and the candidate self-join, verify joins and clusters join all see
-    the same dense ids, which are assigned at execution.
+    The sketches are materialized once, so the sketch pass runs once.
+    Their ids are a pure function of content (``operators/sketch.py``),
+    the same ``sketch_with_resume`` gives the pages, so ``cluster_id``
+    does not depend on partition layout or core count.
     """
     # localCheckpoint over .persist(): the columnar cache builder
     # measured +66s on 600MB of sketch blobs (compression + memory

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from .oracle import DedupConfig
 from .operators import sketch_pages
+from .operators.sketch import ID_PARTS
 
 LINEAGE_SCHEMA = "run_id string, part_id int, stage string, status string, ts timestamp"
 SKETCH_META_SCHEMA = (
@@ -123,7 +124,13 @@ def sketch_with_resume(
 
     part_id = pmod(xxhash64(url), n_parts) — a pure function of the row,
     so re-runs assign identical parts regardless of input layout
-    (checkpoint-resumable per north_rule). Returns the full sketches DF.
+    (checkpoint-resumable per north_rule). Returns the full sketches DF,
+    whose ``url_id`` values are those ``sketch_pages`` gives the same
+    pages in memory, however the parts were split across runs. That
+    needs ``n_parts`` to divide ``ID_PARTS`` (a power of two up to
+    65,536); any other value raises before anything is written. The
+    write has no exchange of its own: it keeps the sketch stage's id
+    exchange, so each part directory gets one file per writing task.
 
     The sketch CONFIG is part of the table's identity: a one-row
     ``sketch_meta`` table records (criterion, k, m, p, aux_p, encoding,
@@ -135,6 +142,10 @@ def sketch_with_resume(
     a pure function of it, so a different n_parts reshuffles which
     rows belong to which "done" part.
     """
+    if n_parts <= 0 or ID_PARTS % n_parts:
+        raise ValueError(
+            f"n_parts must be a power of two from 1 to {ID_PARTS}, got {n_parts}"
+        )
     run_id = run_id or uuid.uuid4().hex[:12]
     meta = (
         cfg.criterion,
@@ -175,41 +186,17 @@ def sketch_with_resume(
         wh.write("sketch_meta", wh.spark.createDataFrame([meta], SKETCH_META_SCHEMA))
     done = wh.completed_parts("sketch")
     todo = sorted(set(range(n_parts)) - done)
-    staged = pages.withColumn(
-        "part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
-    )
     if todo:
         t0 = time.time()
-        from pyspark.sql import Window
-
-        missing = staged.where(F.col("part_id").isin(todo))
-        sk = sketch_pages(missing, cfg).withColumn(
-            "part_id", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
-        )
-        # Part-scoped dense url_id: (part_id << 40) | row_number-within-
-        # part (ordered by url). Unlike a per-job monotonic id, this is
-        # a pure function of the part's CONTENT, so ids are stable
-        # across resumed runs — run 2's freshly sketched parts can never
-        # collide with run 1's persisted parts (distinct part_id
-        # prefixes), and re-sketching the same part reproduces the same
-        # ids. Unlike xxhash64(url), collision-free by construction
-        # (2^40 rows/part x 2^22 parts headroom at 10^12 docs). The
-        # window shuffles by part_id — which the partitioned write
-        # benefits from anyway (one directory per task group).
-        # orderBy(url, xxhash64(hll14)): two staged rows in one part CAN
-        # share a url (re-crawl snapshots); a url-only orderBy would
-        # make their row_number assignment nondeterministic across
-        # re-sketches, silently breaking the documented resume
-        # stability. The sketch-blob hash is a pure function of the
-        # row's content, so the full sort key is content-deterministic.
-        sk = sk.withColumn(
-            "url_id",
-            F.shiftleft(F.col("part_id").cast("long"), 40)
-            + F.row_number().over(
-                Window.partitionBy("part_id").orderBy("url", F.xxhash64("hll14"))
-            )
-            - F.lit(1),
-        )
+        part_id = F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
+        # the ids sketch_pages assigns, never a caller's: those need not
+        # be unique across runs. n_parts divides ID_PARTS, so an id's
+        # prefix p lies in resume part p mod n_parts (an older
+        # warehouse's ids have that part as prefix): this run ranks all
+        # of every id part it sketches, and its ids never meet those of
+        # parts done in another run.
+        missing = pages.where(part_id.isin(todo)).drop("url_id")
+        sk = sketch_pages(missing, cfg).withColumn("part_id", part_id)
         # Dynamic partition overwrite makes the write idempotent per
         # part_id: a crash between this write and mark_parts leaves the
         # parts unrecorded, and the resumed run REPLACES those exact

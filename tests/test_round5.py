@@ -1,5 +1,5 @@
 """Round-5 regression tests: vectorized Ertl-MLE bit-identity, the
-collision-free dense url_id spine, and the cb_bucket_pairs flood guard
+collision-free, content-determined url_id, and the cb_bucket_pairs flood guard
 (VERDICT r4 "What's wrong" #1-#4)."""
 
 from __future__ import annotations
@@ -64,7 +64,7 @@ def test_ertl_mle_batch_single_row_and_1d():
     assert ertl_mle_batch(h, 14)[0] == ertl_mle(h, 14)
 
 
-# ------------------------------------------------------- dense url_id spine
+# ------------------------------------------------- content-determined url_id
 
 
 def test_dense_ids_unique_and_default(spark):
@@ -73,7 +73,7 @@ def test_dense_ids_unique_and_default(spark):
     n = sk.count()
     assert n == 200
     assert sk.select("url_id").distinct().count() == n  # collision-free
-    # dense ids are NOT url hashes (the r4 silent-merge hazard)
+    # the ids are NOT url hashes (the r4 silent-merge hazard)
     hashed = sk.withColumn("_h", F.xxhash64("url")).where(
         F.col("_h") == F.col("url_id")
     )
@@ -94,7 +94,7 @@ def test_forced_id_collision_wrongly_merges(spark):
     """Documents: A ~ B (true dups), C unrelated. Forcing C onto B's
     url_id (what a 64-bit hash surrogate does at 10^12-doc scale,
     n^2/2^65 times) conflates C with the A-B cluster — the hazard the
-    dense spine closes."""
+    collision-free url_id closes."""
     pages = spark.createDataFrame(
         [
             ("a", 1, LONG_A),
@@ -169,7 +169,7 @@ def test_verify_shared_url_id_uses_each_rows_own_blobs(spark):
 
 
 def test_dense_ids_keep_collision_victims_apart(spark):
-    """Same three documents through the default dense-id pipeline:
+    """Same three documents through the default-id pipeline:
     C stays out of the A-B cluster."""
     pages = spark.createDataFrame(
         [
@@ -185,26 +185,67 @@ def test_dense_ids_keep_collision_victims_apart(spark):
     assert clusters.get("c") != clusters["a"]  # no silent merge
 
 
+def _ids(sk):
+    return {r.url: r.url_id for r in sk.select("url", "url_id").collect()}
+
+
+def test_sketch_ids_and_star_pairs_independent_of_layout(spark):
+    from cuda_selection_criteria_spark.operators.candidates import candidate_pairs
+
+    pages = pages_from_corpus(spark, 200, seed=11).localCheckpoint(eager=True)
+    runs = []
+    for src, min_partitions in (
+        (pages.coalesce(1), None),
+        (pages.repartition(2), None),
+        (pages.repartition(5), None),
+        (pages, 6),
+    ):
+        sk = sketch_pages(src, CFG, min_partitions=min_partitions)
+        sk = sk.localCheckpoint(eager=True)
+        star = candidate_pairs(sk, CFG, bucket_pairing="star")
+        runs.append((_ids(sk), sorted(tuple(r) for r in star.collect())))
+    assert len(runs[0][0]) == 200 and runs[0][1]
+    assert all(run == runs[0] for run in runs[1:])
+
+
 def test_warehouse_ids_stable_and_content_determined(tmp_path, spark):
-    """Part-scoped warehouse ids: unique, reproduced identically on
-    re-read after resume, and a pure function of table content (a
-    fresh warehouse over the same pages assigns the same ids)."""
+    """Warehouse ids: unique, reproduced identically on re-read after
+    resume, and equal to the in-memory sketch_pages ids, also when the
+    parts are sketched in two runs."""
     from cuda_selection_criteria_spark.warehouse import Warehouse, sketch_with_resume
 
     pages = pages_from_corpus(spark, 120, seed=5, partitions=3)
-    wh1 = Warehouse(spark, str(tmp_path / "wh1"))
-    sk1 = sketch_with_resume(wh1, pages, CFG, n_parts=8, run_id="r1")
-    ids1 = {r.url: r.url_id for r in sk1.select("url", "url_id").collect()}
-    assert len(set(ids1.values())) == len(ids1)  # unique
-    # resume (no todo parts) reproduces the persisted ids
-    sk2 = sketch_with_resume(wh1, pages, CFG, n_parts=8, run_id="r2")
-    ids2 = {r.url: r.url_id for r in sk2.select("url", "url_id").collect()}
-    assert ids1 == ids2
-    # content-determined: a fresh warehouse assigns the same mapping
-    wh2 = Warehouse(spark, str(tmp_path / "wh2"))
-    sk3 = sketch_with_resume(wh2, pages, CFG, n_parts=8, run_id="r3")
-    ids3 = {r.url: r.url_id for r in sk3.select("url", "url_id").collect()}
-    assert ids1 == ids3
+    want = _ids(sketch_pages(pages, CFG))
+    assert len(set(want.values())) == len(want) == 120  # unique
+    for n_parts in (4, 8):
+        wh1 = Warehouse(spark, str(tmp_path / f"wh1_{n_parts}"))
+        sk1 = sketch_with_resume(wh1, pages, CFG, n_parts=n_parts, run_id="r1")
+        assert _ids(sk1) == want
+        # resume (no todo parts) reproduces the persisted ids
+        sk2 = sketch_with_resume(wh1, pages, CFG, n_parts=n_parts, run_id="r2")
+        assert _ids(sk2) == want
+        # partial resume: the low half of the parts sketched in one run,
+        # the high half in the next, which the first never saw
+        wh2 = Warehouse(spark, str(tmp_path / f"wh2_{n_parts}"))
+        high = F.pmod(F.xxhash64("url"), F.lit(n_parts)) >= n_parts // 2
+        sketch_with_resume(wh2, pages.where(~high), CFG, n_parts=n_parts, run_id="r3")
+        shutil.rmtree(wh2.path("lineage"))  # as if the high half had not run
+        wh2.mark_parts("r3", "sketch", list(range(n_parts // 2)))
+        sk3 = sketch_with_resume(wh2, pages, CFG, n_parts=n_parts, run_id="r4")
+        assert _ids(sk3) == want
+        metrics = {r.run_id: r.rows_out for r in wh2.read("metrics").collect()}
+        assert metrics["r4"] == pages.where(high).count() > 0
+
+
+@pytest.mark.parametrize("n_parts", [0, 3, 12])
+def test_warehouse_rejects_n_parts_not_dividing_id_parts(tmp_path, spark, n_parts):
+    from cuda_selection_criteria_spark.warehouse import Warehouse, sketch_with_resume
+
+    pages = pages_from_corpus(spark, 20, seed=5)
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    with pytest.raises(ValueError, match="n_parts"):
+        sketch_with_resume(wh, pages, CFG, n_parts=n_parts)
+    assert not (tmp_path / "wh").exists()
 
 
 def test_warehouse_refuses_metaless_resume(tmp_path, spark):
@@ -293,17 +334,6 @@ def test_ertl_mle_batch_empty_batch():
     crash on zero-row inputs."""
     out = ertl_mle_batch(np.zeros((0, 64), dtype=np.int64), 14)
     assert out.shape == (0,)
-
-
-def test_sketch_pages_id_mode_typo_raises_on_every_path(spark):
-    bad = "desne"
-    plain = spark.createDataFrame([("u", LONG_A)], "url string, text string")
-    with_id = spark.createDataFrame(
-        [("u", 1, LONG_A)], "url string, url_id long, text string"
-    )
-    for pages in (plain, with_id):  # passthrough must validate too
-        with pytest.raises(ValueError, match="id_mode"):
-            sketch_pages(pages, CFG, id_mode=bad)
 
 
 def test_cb_max_bucket_spares_neighbor_buckets(spark):

@@ -40,9 +40,13 @@ def test_min_partitions_at_input_width_adds_no_exchange(spark):
     pages = _pages(spark).repartition(3).localCheckpoint()
     assert _n_exchanges(pages) == 0
     n = pages.rdd.getNumPartitions()
-    assert _n_exchanges(sketch_pages(pages, CFG, min_partitions=n)) == 0
     assert _n_exchanges(spread(pages, n)) == 0
-    assert _n_exchanges(sketch_pages(pages, CFG, min_partitions=n + 1)) == 1
+    # the sketch stage's one exchange is its id exchange, as wide as
+    # min_partitions or the input, whichever is wider
+    for min_partitions, width in ((n - 1, n), (n, n), (n + 2, n + 2)):
+        sk = sketch_pages(pages, CFG, min_partitions=min_partitions)
+        assert _n_exchanges(sk) == 1
+        assert sk.rdd.getNumPartitions() == width
 
 
 def test_passed_through_url_id_survives_spread(spark):

@@ -58,6 +58,20 @@ def test_streaming_exact_dedup(spark, tmp_path):
     assert counts == {"aaa": 1, "bbb": 1, "ccc": 1}
 
 
+def test_streaming_sketch_ids_are_url_hashes(spark, tmp_path):
+    """A stream cannot take the batch id window: its ids stay xxhash64(url)."""
+    from cuda_selection_criteria_spark.operators import sketch_pages
+    from cuda_selection_criteria_spark.pipeline import pages_from_corpus
+
+    src_dir = str(tmp_path / "pages")
+    pages_from_corpus(spark, 40, seed=3).write.parquet(src_dir)
+    batch = spark.read.parquet(src_dir)
+    stream = spark.readStream.schema(batch.schema).parquet(src_dir)
+    got = run_available_now(sketch_pages(stream).select("url", "url_id"), "sketch_ids")
+    want = batch.select("url", F.xxhash64("url").alias("url_id"))
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_streaming_band_candidates_stateful(spark, tmp_path):
     """applyInPandasWithState star pairing: connected components of the
     streamed candidate pairs == the batch star pairing's."""
@@ -75,11 +89,9 @@ def test_streaming_band_candidates_stateful(spark, tmp_path):
     pages_from_corpus(spark, 300, seed=11).write.parquet(src_dir)
 
     batch_pages = spark.read.parquet(src_dir)
-    # id_mode="hash": the diff compares node ids across two independent
-    # materializations (stream vs batch), so both sides must use the
-    # pure-function id space (streaming always hashes; dense ids are
-    # per-materialization)
-    sk = sketch_pages(batch_pages, cfg, id_mode="hash")
+    # the diff compares node ids across stream and batch, so the batch
+    # side passes through the id a stream assigns, xxhash64(url)
+    sk = sketch_pages(batch_pages.withColumn("url_id", F.xxhash64("url")), cfg)
     batch_pairs = {
         (r.id_a, r.id_b)
         for r in candidate_pairs(sk, cfg, bucket_pairing="star").collect()

@@ -66,7 +66,8 @@ def main() -> None:
     }
     notes = {
         "dup_pairs_smh": (
-            "Want: narrow mapInPandas sketch pass (no shuffle before it), "
+            "Want: one hash exchange on the url_id part before the id window "
+            "and the mapInPandas sketch pass (none between them), then "
             "band-key-only exchanges, register blobs joined in post-candidates, "
             "no cartesian join node. NOTE: this audit unrolls the lineage — "
             "the sketch subtree appears 4x here because the production "
