@@ -9,3 +9,14 @@ connected-components clustering. See SURVEY.md for the blueprint.
 """
 
 __version__ = "0.1.0"
+
+import sys as _sys
+
+# Inside a PySpark worker (the flag is set by the worker's per-task set-up,
+# before a UDF unpickles): stop every later task from re-reading the
+# worker's zip archives; see _worker.py.
+_files = _sys.modules.get("pyspark.core.files")
+if _files is not None and _files.SparkFiles._is_running_on_worker:
+    from ._worker import install_zip_stat_guard
+
+    install_zip_stat_guard()

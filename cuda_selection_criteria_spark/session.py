@@ -21,6 +21,10 @@ def get_spark(
       [batch, 16384]-byte register matrices stay cache/memory friendly;
     - shuffle partitions sized to cores at local scale (cluster deploys
       override via spark-submit conf).
+
+    Python workers need no setting here: the package stops their
+    per-task re-reads of zip archives itself, from ``__init__`` in a
+    worker (see ``_worker.py``).
     """
     # glibc mmap's every >=128KB allocation and returns it to the OS on
     # free, so each numpy batch buffer in a UDF worker page-faults from
